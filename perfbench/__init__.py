@@ -1,0 +1,1 @@
+"""Benchmark of the validation engine; entry point `perfbench/run.py`."""
