@@ -25,12 +25,17 @@ sys.path.insert(0, os.environ["RTAD_REPO"])
 from real_time_anomaly_detection_spark import engine, synth
 from real_time_anomaly_detection_spark.operators import drift
 from real_time_anomaly_detection_spark.session import get_spark
-import bench
 
 cores = int(os.environ["RTAD_CORES"])
 n_clips = int(os.environ["RTAD_CLIPS"])
 spark = get_spark(f"rtad-scaling-{cores}", cores=cores, shuffle_partitions=max(cores, 8))
-cfg, clips, refs = bench.clips_table(spark, n_clips)
+# synthesize once (cached as parquet under .cache/); both levels read the same files
+path = os.path.join(os.environ["RTAD_REPO"], ".cache", f"clips_bench_{n_clips}")
+cfg = synth.golden_config(n_clips=n_clips, clips_per_partition=max(n_clips // 20, 1))
+if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    synth.clips_df(spark, cfg).write.mode("overwrite").parquet(path)
+    synth.transcripts_ref_df(spark, cfg).write.mode("overwrite").parquet(path + "_refs")
+clips, refs = spark.read.parquet(path), spark.read.parquet(path + "_refs")
 clean = synth.scaled(synth.clean_config(), n_clips=4000, clips_per_partition=1000)
 baseline = drift.make_baseline(synth.clips_df(spark, clean), ("dur_ms", "sr_hz"))
 n_rows = clips.count()
@@ -61,300 +66,6 @@ times = sorted(run_once() for _ in range(3))
 dt = times[1]
 print("RESULT " + json.dumps({"cores": cores, "sec": dt, "rows": n_rows,
                               "all_sec": times, "clips_per_sec": n_rows / dt}))
-"""
-
-
-_CHILD_NEARDUP = r"""
-import json, os, sys, time
-sys.path.insert(0, os.environ["RTAD_REPO"])
-from real_time_anomaly_detection_spark.queries import (
-    q34_neardup_lsh_verified, q40_simhash_hamming, q42_embedding_neardup_lsh)
-from real_time_anomaly_detection_spark.session import get_spark
-
-cores = int(os.environ["RTAD_CORES"])
-sf_dir = os.environ.get("RTAD_SF_DIR", "/root/testdata/sf0.1")
-spark = get_spark(f"rtad-ndscaling-{cores}", cores=cores, shuffle_partitions=max(cores, 8))
-# production configs: threshold-derived banding (q42 at the corpus's planted
-# similarity regime, 0.9); the oracle-pinned dense geometry is a documented
-# scale-killer on clustered corpora and is not what runs at scale
-QS = {"q34": q34_neardup_lsh_verified, "q40": q40_simhash_hamming,
-      "q42": lambda s, d: q42_embedding_neardup_lsh(s, d, threshold=0.9)}
-n_docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).count()
-
-def run_once():
-    # same hygiene as the validation protocol: no cross-run cache reuse, and
-    # a driver GC so the ContextCleaner reaps the previous run's shuffles
-    spark.catalog.clearCache()
-    spark._jvm.System.gc()
-    time.sleep(2)
-    per = {}
-    for name, fn in QS.items():
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        per[name] = time.perf_counter() - t0
-    return per
-
-run_once()  # warm-up
-runs = [run_once() for _ in range(3)]
-med = {k: sorted(r[k] for r in runs)[1] for k in QS}
-total = sum(med.values())
-print("RESULT " + json.dumps({"cores": cores, "sec": total, "per_query": med,
-                              "n_docs": n_docs, "docs_per_sec": n_docs / total}))
-"""
-
-
-_CHILD_VOCAB = r"""
-import json, os, sys, time
-sys.path.insert(0, os.environ["RTAD_REPO"])
-from real_time_anomaly_detection_spark.caching import release_cached
-from real_time_anomaly_detection_spark.queries import (
-    q58_vocab_df_stats, q59_unigram_logprob)
-from real_time_anomaly_detection_spark.session import get_spark
-
-cores = int(os.environ["RTAD_CORES"])
-sf_dir = os.environ["RTAD_SF_DIR"]
-spark = get_spark(f"rtad-vocabscaling-{cores}", cores=cores,
-                  shuffle_partitions=max(cores, 8))
-QS = {"q58": q58_vocab_df_stats, "q59": q59_unigram_logprob}
-n_docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).count()
-
-def run_once():
-    spark.catalog.clearCache()
-    spark._jvm.System.gc()
-    time.sleep(2)
-    per = {}
-    for name, fn in QS.items():
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        per[name] = time.perf_counter() - t0
-        release_cached()  # q59 persists its shared per-doc relation
-    return per
-
-run_once()  # warm-up
-runs = [run_once() for _ in range(3)]
-med = {k: sorted(r[k] for r in runs)[1] for k in QS}
-total = sum(med.values())
-print("RESULT " + json.dumps({"cores": cores, "sec": total, "per_query": med,
-                              "n_docs": n_docs, "docs_per_sec": n_docs / total}))
-"""
-
-
-def main_vocab(args, lo: int, hi: int) -> None:
-    """Scaling evidence for the corpus-statistics family (q58 vocabulary DF
-    stats, q59 self-trained unigram-LM scoring): the token-stream ops whose
-    scale design is 'collapse scan-locally, shuffle only vocabulary-scale
-    rows'. APPENDS to the report. Corpus: the 200k-doc realistic-density
-    table the near-dup pair uses (RTAD_SF_DIR overrides)."""
-    if "RTAD_SF_DIR" not in os.environ:
-        cached = os.path.join(REPO, ".cache", "neardup_scaling_200000_80000")
-        if os.path.isdir(cached):
-            os.environ["RTAD_SF_DIR"] = cached
-        else:
-            sys.path.insert(0, REPO)
-            import bench
-
-            os.environ["RTAD_SF_DIR"] = bench.neardup_corpus_dir()
-    corpus = os.environ["RTAD_SF_DIR"]
-    ceiling = measure_ceiling(lo, hi)
-    mem_ceiling = measure_mem_ceiling(lo, hi)
-    r_lo = run_level(lo, 0, child=_CHILD_VOCAB)
-    r_hi = run_level(hi, 0, child=_CHILD_VOCAB)
-    eff = (r_hi["docs_per_sec"] / r_lo["docs_per_sec"]) / (hi / lo)
-    per_eff = {
-        k: round((r_lo["per_query"][k] / r_hi["per_query"][k]) / (hi / lo), 3)
-        for k in r_lo["per_query"]
-    }
-    print(json.dumps({"N": r_lo, "4N": r_hi, "efficiency": round(eff, 3),
-                      "per_query_efficiency": per_eff,
-                      "cpu_ceiling": round(ceiling["ceiling"], 3),
-                      "mem_ceiling": round(mem_ceiling, 3)}))
-
-    def row(r):
-        per = ", ".join(f"{k} {v:.1f}s" for k, v in r["per_query"].items())
-        return (f"| local[{r['cores']}] | {r['sec']:.2f} | {per} | "
-                f"{r['docs_per_sec']:.1f} |")
-
-    with open(args.out, "a") as f:
-        f.write(f"""
-## Vocabulary/LM family pair: local[{lo}] -> local[{hi}] (r6)
-
-Same protocol (separate processes, warm-up + median of 3, cache cleared +
-driver GC before every timed run) on the corpus-statistics family: q58
-(vocabulary document-frequency table) and q59 (self-trained unigram-LM
-perplexity proxy), over `{corpus}` ({r_lo['n_docs']} documents). Scale
-design under test: per-doc term counts collapse SCAN-LOCALLY (mapInPandas,
-zero shuffle); only vocabulary-scale (term, ...) rows ever reach an
-Exchange, so the jobs should scale like map-side work despite being
-token-stream computations.
-
-| parallelism | wall sec (median, 2 queries) | per-query medians | docs/sec |
-| --- | --- | --- | --- |
-{row(r_lo)}
-{row(r_hi)}
-
-**Vocabulary/LM scaling efficiency = {eff:.3f}** (per query: {per_eff}).
-Ceilings for this pair on this box: pure-CPU {ceiling['ceiling']:.3f},
-memory-bandwidth {mem_ceiling:.3f}.
-""")
-
-
-_CHILD_SPANS = r"""
-import json, os, sys, time
-sys.path.insert(0, os.environ["RTAD_REPO"])
-from real_time_anomaly_detection_spark.caching import release_cached
-from real_time_anomaly_detection_spark.queries import (
-    q64_dup_span_stats, q65_dup_span_removal)
-from real_time_anomaly_detection_spark.session import get_spark
-
-cores = int(os.environ["RTAD_CORES"])
-sf_dir = os.environ["RTAD_SF_DIR"]
-spark = get_spark(f"rtad-spanscaling-{cores}", cores=cores,
-                  shuffle_partitions=max(cores, 8))
-QS = {"q64": q64_dup_span_stats, "q65": q65_dup_span_removal}
-n_docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).count()
-
-def run_once():
-    spark.catalog.clearCache()
-    spark._jvm.System.gc()
-    time.sleep(2)
-    per = {}
-    for name, fn in QS.items():
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        per[name] = time.perf_counter() - t0
-        release_cached()  # both persist the shared tokenize+hash base
-    return per
-
-run_once()  # warm-up
-runs = [run_once() for _ in range(3)]
-med = {k: sorted(r[k] for r in runs)[1] for k in QS}
-total = sum(med.values())
-print("RESULT " + json.dumps({"cores": cores, "sec": total, "per_query": med,
-                              "n_docs": n_docs, "docs_per_sec": n_docs / total}))
-"""
-
-
-def main_spans(args, lo: int, hi: int) -> None:
-    """Scaling evidence for the exact-substring dedup family (q64 dup-span
-    stats, q65 span removal) — the one family whose corpus-TOKEN-scale
-    shuffle is inherent to the algorithm (global window-hash agreement),
-    so its scaling behavior is the most load-bearing of the token ops.
-    APPENDS to the report. Corpus: a 200k-doc make_span_documents table —
-    NOT the near-dup corpus: its synthetic words fragment under the
-    [a-z]+ tokenizer to ~15 distinct letter runs (70M spans / 15 distinct
-    window hashes measured), so a pair there times the all-duplicate
-    explosion instead of the design (RTAD_SF_DIR overrides)."""
-    if "RTAD_SF_DIR" not in os.environ:
-        cached = os.path.join(REPO, ".cache", "spans_scaling_200000")
-        if not os.path.isdir(cached):
-            sys.path.insert(0, os.path.join(REPO, "tools"))
-            import make_sf1
-
-            os.makedirs(cached, exist_ok=True)
-            make_sf1.make_span_documents(cached, n_docs=200_000)
-        os.environ["RTAD_SF_DIR"] = cached
-    corpus = os.environ["RTAD_SF_DIR"]
-    ceiling = measure_ceiling(lo, hi)
-    mem_ceiling = measure_mem_ceiling(lo, hi)
-    r_lo = run_level(lo, 0, child=_CHILD_SPANS)
-    r_hi = run_level(hi, 0, child=_CHILD_SPANS)
-    eff = (r_hi["docs_per_sec"] / r_lo["docs_per_sec"]) / (hi / lo)
-    per_eff = {
-        k: round((r_lo["per_query"][k] / r_hi["per_query"][k]) / (hi / lo), 3)
-        for k in r_lo["per_query"]
-    }
-    print(json.dumps({"N": r_lo, "4N": r_hi, "efficiency": round(eff, 3),
-                      "per_query_efficiency": per_eff,
-                      "cpu_ceiling": round(ceiling["ceiling"], 3),
-                      "mem_ceiling": round(mem_ceiling, 3)}))
-
-    def row(r):
-        per = ", ".join(f"{k} {v:.1f}s" for k, v in r["per_query"].items())
-        return (f"| local[{r['cores']}] | {r['sec']:.2f} | {per} | "
-                f"{r['docs_per_sec']:.1f} |")
-
-    with open(args.out, "a") as f:
-        f.write(f"""
-## Exact-substring dedup family pair: local[{lo}] -> local[{hi}] (r6)
-
-Same protocol (separate processes, warm-up + median of 3, cache cleared +
-driver GC before every timed run) on the exact-substring dedup family:
-q64 (duplicate-span stats) and q65 (span removal), over `{corpus}`
-({r_lo['n_docs']} documents). Unlike the vocab family, this family's
-per-WINDOW hash agg Exchange is corpus-token-scale BY DESIGN (global
-window-hash agreement is the algorithm — Lee et al. pay a global suffix
-array for the same reason), so this pair measures how the engine's one
-inherently shuffle-heavy token op scales.
-
-| parallelism | wall sec (median, 2 queries) | per-query medians | docs/sec |
-| --- | --- | --- | --- |
-{row(r_lo)}
-{row(r_hi)}
-
-**Exact-substring dedup scaling efficiency = {eff:.3f}** (per query:
-{per_eff}). Ceilings for this pair on this box: pure-CPU
-{ceiling['ceiling']:.3f}, memory-bandwidth {mem_ceiling:.3f}.
-""")
-
-
-_CHILD_AUDIO = r"""
-import json, os, sys, time
-sys.path.insert(0, os.environ["RTAD_REPO"])
-import bench  # reuse the cached bench clips table (synthesized once)
-from real_time_anomaly_detection_spark.operators import audio_fingerprint as AFP
-from real_time_anomaly_detection_spark.session import get_spark
-
-cores = int(os.environ["RTAD_CORES"])
-n_clips = int(os.environ["RTAD_CLIPS"])
-spark = get_spark(f"rtad-audioscaling-{cores}", cores=cores,
-                  shuffle_partitions=max(cores, 8))
-_, clips, _ = bench.clips_table(spark, n_clips)
-n = clips.count()
-
-def run_once():
-    spark.catalog.clearCache()
-    spark._jvm.System.gc()
-    time.sleep(2)
-    t0 = time.perf_counter()
-    n_pairs = AFP.neardup_pairs(AFP.fingerprints(clips)).count()
-    return time.perf_counter() - t0, n_pairs
-
-run_once()  # warm-up
-runs = sorted(run_once() for _ in range(3))
-sec, n_pairs = runs[1]
-print("RESULT " + json.dumps({"cores": cores, "sec": sec, "n_clips": n,
-                              "n_pairs": n_pairs, "clips_per_sec": n / sec}))
-"""
-
-
-_CHILD_CURATE = r"""
-import json, os, sys, time
-sys.path.insert(0, os.environ["RTAD_REPO"])
-import bench  # reuse the cached bench clips table (synthesized once)
-from real_time_anomaly_detection_spark.operators import audio_pipeline as AP
-from real_time_anomaly_detection_spark.session import get_spark
-
-cores = int(os.environ["RTAD_CORES"])
-n_clips = int(os.environ["RTAD_CLIPS"])
-spark = get_spark(f"rtad-curatescaling-{cores}", cores=cores,
-                  shuffle_partitions=max(cores, 8))
-_, clips, _ = bench.clips_table(spark, n_clips)
-n = clips.count()
-
-def run_once():
-    spark.catalog.clearCache()
-    spark._jvm.System.gc()
-    time.sleep(2)
-    t0 = time.perf_counter()
-    # noop write = full evaluation incl. the re-encode (a count would
-    # column-prune bytes derivation is the whole cost here anyway)
-    AP.curate_clips(clips).write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
-
-run_once()  # warm-up
-sec = sorted(run_once() for _ in range(3))[1]
-print("RESULT " + json.dumps({"cores": cores, "sec": sec, "n_clips": n,
-                              "clips_per_sec": n / sec}))
 """
 
 
@@ -389,42 +100,12 @@ def measure_ceiling(lo: int, hi: int) -> dict:
     }
 
 
-def _memburn(_):
-    import numpy as np
-
-    a = np.random.rand(40_000_000)
-    s = 0.0
-    for _ in range(6):
-        s += float((a * 1.0000001).sum())
-    return s
-
-
-def measure_mem_ceiling(lo: int, hi: int) -> float:
-    """Memory-BANDWIDTH-bound scaling ceiling: stream 320 MB arrays through
-    multiply+sum per process. The pure-CPU ceiling (cache-resident) is ~1.0
-    on this box for 2->8, but DRAM bandwidth is shared across cores, so
-    bandwidth-bound stages (e.g. array_intersect over millions of joined
-    token arrays) cannot scale past this number no matter the plan."""
-    import multiprocessing as mp
-    import time as _time
-
-    def _thr(n: int) -> float:
-        t0 = _time.perf_counter()
-        with mp.Pool(n) as p:
-            p.map(_memburn, range(n))
-        return n / (_time.perf_counter() - t0)
-
-    thr_lo = _thr(lo)
-    thr_hi = _thr(hi)
-    return (thr_hi / thr_lo) / (hi / lo)
-
-
-def run_level(cores: int, n_clips: int, child: str = _CHILD) -> dict:
+def run_level(cores: int, n_clips: int) -> dict:
     env = dict(
         os.environ, RTAD_REPO=REPO, RTAD_CORES=str(cores), RTAD_CLIPS=str(n_clips)
     )
     out = subprocess.run(
-        [sys.executable, "-c", child], env=env, cwd=REPO, capture_output=True, text=True
+        [sys.executable, "-c", _CHILD], env=env, cwd=REPO, capture_output=True, text=True
     )
     for line in out.stdout.splitlines():
         if line.startswith("RESULT "):
@@ -432,312 +113,21 @@ def run_level(cores: int, n_clips: int, child: str = _CHILD) -> dict:
     raise RuntimeError(f"child failed (cores={cores}):\n{out.stdout[-2000:]}\n{out.stderr[-4000:]}")
 
 
-def main_neardup(args, lo: int, hi: int) -> None:
-    """Scaling evidence for the shuffle-heavy near-dup family (q34 minhash
-    LSH->verify, q40 simhash hamming join, q42 embedding LSH->verify): the
-    queries where scaling is most at risk — every stage is a wide shuffle
-    (explode -> band self-join -> distinct -> verify join), unlike the
-    validation job whose families are mostly map-side. APPENDS to the report
-    (the validation section is the primary evidence, left untouched).
-
-    Default corpus (r5): bench.py's controlled-density synthetic corpus
-    (~1% near-dup rate) — on the degenerate sf0.1 corpus the verify stage
-    is ~84% of all pairs and the measurement is memory-bandwidth-bound, so
-    it cannot reflect the candidate-generation design (VERDICT r4 #3).
-    Override with RTAD_SF_DIR."""
-    if "RTAD_SF_DIR" not in os.environ:
-        sys.path.insert(0, REPO)
-        import bench
-
-        os.environ["RTAD_SF_DIR"] = bench.neardup_corpus_dir()
-    corpus = os.environ["RTAD_SF_DIR"]
-    ceiling = measure_ceiling(lo, hi)
-    mem_ceiling = measure_mem_ceiling(lo, hi)
-    r_lo = run_level(lo, 0, child=_CHILD_NEARDUP)
-    r_hi = run_level(hi, 0, child=_CHILD_NEARDUP)
-    eff = (r_hi["docs_per_sec"] / r_lo["docs_per_sec"]) / (hi / lo)
-    per_eff = {
-        k: round((r_lo["per_query"][k] / r_hi["per_query"][k]) / (hi / lo), 3)
-        for k in r_lo["per_query"]
-    }
-    print(json.dumps({"N": r_lo, "4N": r_hi, "efficiency": round(eff, 3),
-                      "per_query_efficiency": per_eff,
-                      "cpu_ceiling": round(ceiling["ceiling"], 3),
-                      "mem_ceiling": round(mem_ceiling, 3)}))
-
-    def row(r):
-        per = ", ".join(f"{k} {v:.1f}s" for k, v in r["per_query"].items())
-        return (f"| local[{r['cores']}] | {r['sec']:.2f} | {per} | "
-                f"{r['docs_per_sec']:.1f} |")
-
-    with open(args.out, "a") as f:
-        f.write(f"""
-## Near-dup family pair: local[{lo}] -> local[{hi}] (VERDICT r2 #7)
-
-Same protocol (separate processes, warm-up + median of 3, cache cleared +
-driver GC before every timed run) on the shuffle-heaviest queries: q34
-(MinHash-LSH candidates -> exact Jaccard verify), q40 (60-bit simhash +
-hamming-banded pair join), q42 (banded cosine-LSH -> exact cosine verify),
-over `{corpus}` ({r_lo['n_docs']} documents).
-Unlike the validation job (mostly map-side families), every stage here is a
-wide shuffle: explode -> band self-join -> distinct -> verify join.
-
-| parallelism | wall sec (median, 3 queries) | per-query medians | docs/sec |
-| --- | --- | --- | --- |
-{row(r_lo)}
-{row(r_hi)}
-
-**Near-dup scaling efficiency = {eff:.3f}** (per query: {per_eff}).
-Ceilings for this pair on this box: pure-CPU {ceiling['ceiling']:.3f},
-memory-BANDWIDTH-bound {mem_ceiling:.3f}. The near-dup verify stages stream
-millions of joined token/embedding arrays through array_intersect /
-dot-products — bandwidth-bound work, so the honest envelope is the memory
-ceiling, not the CPU one: engine/mem-ceiling = {eff / mem_ceiling:.3f}.
-Sub-second walls are stage-latency-bound — below the regime where a
-throughput ratio means anything; the longest queries are the signal.
-Corpus note: the default is the controlled-density (~1% near-dup) corpus,
-so these numbers reflect candidate generation + a proportionate verify
-stage; on the degenerate sf0.1 corpus (~49% of ALL pairs candidates) the
-same measurement is verify-bound at the memory-bandwidth ceiling
-(RTAD_SF_DIR=/root/testdata/sf0.1 reproduces it). Candidate generation
-carries the exact `salt` splitter and the lossy `max_bucket_size` cap for
-hot buckets (queries.py:_lsh_candidate_pairs, both pytest-pinned).
-""")
-
-
-def main_audio(args, lo: int, hi: int) -> None:
-    """Scaling evidence for the audio near-dup pipeline (fingerprints ->
-    banded Hamming pairs): the payload-heaviest operator — per-clip decode
-    + FFT inside one mapInPandas scan (embarrassingly parallel, the scaling
-    floor should be the CPU ceiling) feeding the chunk self-join + distinct
-    (the only shuffles). APPENDS to the report."""
-    ceiling = measure_ceiling(lo, hi)
-    mem_ceiling = measure_mem_ceiling(lo, hi)
-    r_lo = run_level(lo, args.clips, child=_CHILD_AUDIO)
-    r_hi = run_level(hi, args.clips, child=_CHILD_AUDIO)
-    eff = (r_hi["clips_per_sec"] / r_lo["clips_per_sec"]) / (hi / lo)
-    print(json.dumps({"N": r_lo, "4N": r_hi, "efficiency": round(eff, 3),
-                      "cpu_ceiling": round(ceiling["ceiling"], 3),
-                      "mem_ceiling": round(mem_ceiling, 3)}))
-    with open(args.out, "a") as f:
-        f.write(f"""
-## Audio near-dup pair: local[{lo}] -> local[{hi}] (round 6)
-
-Same protocol (separate processes, warm-up + median of 3, cache cleared +
-driver GC before every timed run) on the audio fingerprint near-dup
-pipeline over {r_lo['n_clips']} synthesized clips: per-clip PCM decode +
-FFT band descriptor + 128-bit hyperplane signature inside ONE mapInPandas
-payload scan, then the (band, chunk) self-join + Hamming verify +
-distinct ({r_lo['n_pairs']} pairs).
-
-| parallelism | wall sec (median) | clips/sec |
-| --- | --- | --- |
-| local[{lo}] | {r_lo['sec']:.2f} | {r_lo['clips_per_sec']:.1f} |
-| local[{hi}] | {r_hi['sec']:.2f} | {r_hi['clips_per_sec']:.1f} |
-
-**Audio near-dup scaling efficiency = {eff:.3f}** (pure-CPU ceiling for
-this pair {ceiling['ceiling']:.3f}, memory-bandwidth ceiling
-{mem_ceiling:.3f}; engine/CPU-ceiling = {eff / ceiling['ceiling']:.3f}).
-The fingerprint scan dominates and is map-side parallel; the join shuffles
-only 8 chunk rows + the 8-int band array per clip — fingerprint-scale, not
-payload-scale — so the pipeline tracks the machine's scaling envelope.
-""")
-
-
-def main_curate(args, lo: int, hi: int) -> None:
-    """Scaling evidence for the fused payload-rewrite pipeline
-    (curate-audio: trim + resample + normalize in one mapInPandas scan —
-    map-only, zero shuffles, so its floor is the machine ceiling; this is
-    the op a 100 TB corpus pays per-byte, which is why it must track the
-    envelope). APPENDS to the report."""
-    ceiling = measure_ceiling(lo, hi)
-    mem_ceiling = measure_mem_ceiling(lo, hi)
-    r_lo = run_level(lo, args.clips, child=_CHILD_CURATE)
-    r_hi = run_level(hi, args.clips, child=_CHILD_CURATE)
-    eff = (r_hi["clips_per_sec"] / r_lo["clips_per_sec"]) / (hi / lo)
-    print(json.dumps({"N": r_lo, "4N": r_hi, "efficiency": round(eff, 3),
-                      "cpu_ceiling": round(ceiling["ceiling"], 3),
-                      "mem_ceiling": round(mem_ceiling, 3)}))
-    with open(args.out, "a") as f:
-        f.write(f"""
-## Fused curation pipeline pair: local[{lo}] -> local[{hi}] (round 6)
-
-Same protocol (separate processes, warm-up + median of 3, cache cleared +
-driver GC before every timed run) on the fused payload-rewrite pipeline
-(`curate-audio`: edge-silence trim + anti-aliased resample to 16 kHz +
-peak-safe loudness normalization, ONE decode->numpy->encode mapInPandas
-scan, noop sink so the re-encode is fully evaluated) over
-{r_lo['n_clips']} synthesized clips.
-
-| parallelism | wall sec (median) | clips/sec |
-| --- | --- | --- |
-| local[{lo}] | {r_lo['sec']:.2f} | {r_lo['clips_per_sec']:.1f} |
-| local[{hi}] | {r_hi['sec']:.2f} | {r_hi['clips_per_sec']:.1f} |
-
-**Fused-curation scaling efficiency = {eff:.3f}** (pure-CPU ceiling for
-this pair {ceiling['ceiling']:.3f}, memory-bandwidth ceiling
-{mem_ceiling:.3f}; engine/CPU-ceiling = {eff / ceiling['ceiling']:.3f}).
-Map-only with zero Exchanges — per-task cost is pure decode/numpy/encode,
-so throughput is expected to track the machine envelope and the same job
-shape extends to any executor count by adding input splits.
-""")
-
-
-_CHILD_CONTAINMENT = r"""
-import json, os, sys, time
-sys.path.insert(0, os.environ["RTAD_REPO"])
-from real_time_anomaly_detection_spark.caching import release_cached
-from real_time_anomaly_detection_spark.queries import (
-    q68_semdedup, q69_containment_join, q70_source_overlap)
-from real_time_anomaly_detection_spark.session import get_spark
-
-cores = int(os.environ["RTAD_CORES"])
-zipf_dir = os.environ["RTAD_ZIPF_DIR"]
-emb_dir = os.environ["RTAD_EMB_DIR"]
-spark = get_spark(f"rtad-ctscaling-{cores}", cores=cores,
-                  shuffle_partitions=max(cores, 8))
-QS = {
-    "q69": (lambda s: q69_containment_join(s, zipf_dir)),
-    "q68": (lambda s: q68_semdedup(s, emb_dir, threshold=0.9)),
-    "q70": (lambda s: q70_source_overlap(s, zipf_dir)),
-}
-sel = os.environ.get("RTAD_CT_QUERIES")
-if sel:
-    QS = {k: v for k, v in QS.items() if k in sel.split(",")}
-n_docs = spark.read.parquet(os.path.join(zipf_dir, "documents.parquet")).count()
-
-def run_once():
-    spark.catalog.clearCache()
-    spark._jvm.System.gc()
-    time.sleep(2)
-    per = {}
-    for name, fn in QS.items():
-        t0 = time.perf_counter()
-        fn(spark).write.format("noop").mode("overwrite").save()
-        per[name] = time.perf_counter() - t0
-        release_cached()
-    return per
-
-run_once()  # warm-up
-runs = [run_once() for _ in range(3)]
-med = {k: sorted(r[k] for r in runs)[1] for k in QS}
-total = sum(med.values())
-print("RESULT " + json.dumps({"cores": cores, "sec": total, "per_query": med,
-                              "n_docs": n_docs, "docs_per_sec": n_docs / total}))
-"""
-
-
-def main_containment(args, lo: int, hi: int) -> None:
-    """Scaling evidence for the r6 dedup additions: q69 containment join
-    (Zipf-vocabulary corpus with planted excerpts — the regime prefix
-    filtering is designed for; a uniform vocabulary has nothing to order
-    by), q68 SemDeDup (the 80k-vector clustered embeddings corpus, at the
-    planted-pair 0.9 regime), q70 source-overlap sketches. APPENDS."""
-    if "RTAD_ZIPF_DIR" not in os.environ:
-        cached = os.path.join(REPO, ".cache", "zipf_scaling_100000")
-        if not os.path.isdir(cached):
-            sys.path.insert(0, os.path.join(REPO, "tools"))
-            import make_sf1
-
-            os.makedirs(cached, exist_ok=True)
-            make_sf1.make_zipf_documents(cached, n_docs=100_000)
-        os.environ["RTAD_ZIPF_DIR"] = cached
-    if "RTAD_EMB_DIR" not in os.environ:
-        nd = os.path.join(REPO, ".cache", "neardup_scaling_200000_80000")
-        if not os.path.isdir(nd):
-            sys.path.insert(0, os.path.join(REPO, "tools"))
-            import make_sf1
-
-            os.makedirs(nd, exist_ok=True)
-            make_sf1.make_documents(nd, n_docs=200_000)
-            make_sf1.make_embeddings(nd, n_vecs=80_000)
-        os.environ["RTAD_EMB_DIR"] = nd
-    zipf_dir = os.environ["RTAD_ZIPF_DIR"]
-    emb_dir = os.environ["RTAD_EMB_DIR"]
-    ceiling = measure_ceiling(lo, hi)
-    mem_ceiling = measure_mem_ceiling(lo, hi)
-    r_lo = run_level(lo, 0, child=_CHILD_CONTAINMENT)
-    r_hi = run_level(hi, 0, child=_CHILD_CONTAINMENT)
-    eff = (r_hi["docs_per_sec"] / r_lo["docs_per_sec"]) / (hi / lo)
-    per_eff = {
-        k: round((r_lo["per_query"][k] / r_hi["per_query"][k]) / (hi / lo), 3)
-        for k in r_lo["per_query"]
-    }
-    print(json.dumps({"N": r_lo, "4N": r_hi, "efficiency": round(eff, 3),
-                      "per_query_efficiency": per_eff,
-                      "cpu_ceiling": round(ceiling["ceiling"], 3),
-                      "mem_ceiling": round(mem_ceiling, 3)}))
-
-    def row(r):
-        per = ", ".join(f"{k} {v:.1f}s" for k, v in r["per_query"].items())
-        return (f"| local[{r['cores']}] | {r['sec']:.2f} | {per} | "
-                f"{r['docs_per_sec']:.1f} |")
-
-    with open(args.out, "a") as f:
-        f.write(f"""
-## Containment/SemDeDup/source-overlap pair: local[{lo}] -> local[{hi}] (r6)
-
-Same protocol (separate processes, warm-up + median of 3, cache cleared +
-driver GC before every timed run). q69 containment join over `{zipf_dir}`
-({r_lo['n_docs']} Zipf-vocabulary documents, planted excerpts — a uniform
-vocabulary is the no-op case for rarity-ordered prefix filtering, so this
-pair measures the designed regime); q68 SemDeDup over the 80k-vector
-clustered embeddings at threshold 0.9; q70 source-overlap sketches over the
-same Zipf corpus. docs/sec denominates on the zipf corpus size.
-
-| parallelism | wall sec (median, 3 queries) | per-query medians | docs/sec |
-| --- | --- | --- | --- |
-{row(r_lo)}
-{row(r_hi)}
-
-**r6-dedup-additions scaling efficiency = {eff:.3f}** (per query:
-{per_eff}). Ceilings for this pair on this box: pure-CPU
-{ceiling['ceiling']:.3f}, memory-bandwidth {mem_ceiling:.3f}.
-""")
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--clips", type=int, default=40000)
     ap.add_argument("--cores", default="8,32")
     ap.add_argument("--out", default=os.path.join(REPO, "BENCH", "BASELINE.md"))
-    ap.add_argument("--mode", choices=["validate", "neardup", "audio",
-                                       "vocab", "spans", "curate",
-                                       "containment"],
-                    default="validate")
     args = ap.parse_args()
     lo, hi = (int(x) for x in args.cores.split(","))
 
-    if args.mode == "neardup":
-        main_neardup(args, lo, hi)
-        return
-    if args.mode == "audio":
-        main_audio(args, lo, hi)
-        return
-    if args.mode == "vocab":
-        main_vocab(args, lo, hi)
-        return
-    if args.mode == "spans":
-        main_spans(args, lo, hi)
-        return
-    if args.mode == "curate":
-        main_curate(args, lo, hi)
-        return
-    if args.mode == "containment":
-        main_containment(args, lo, hi)
-        return
-
-    # preserve manually-appended / neardup-mode sections across a validate
-    # rewrite: everything from the first secondary '## ' heading onward
+    # preserve manually-appended sections across a rewrite: everything from
+    # the first secondary '## ' heading onward
     tail = ""
     if os.path.exists(args.out):
         prev = open(args.out).read()
         for marker in ("\n## Corroborating pair", "\n## Secondary pair",
-                       "\n## What changed", "\n## Near-dup family pair",
-                       "\n## Audio near-dup pair",
-                       "\n## Vocabulary/LM family pair",
-                       "\n## Exact-substring dedup family pair",
-                       "\n## Fused curation pipeline pair"):
+                       "\n## What changed"):
             i = prev.find(marker)
             if i >= 0:
                 tail = prev[i:]
