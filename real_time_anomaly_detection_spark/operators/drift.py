@@ -28,6 +28,7 @@ comparison never joins.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -172,10 +173,10 @@ def drift_verdicts(
         )
     g = clips.select(part_col, *cols).groupBy(part_col).agg(*aggs)
 
-    outs = []
+    staged = []
     for row in baseline_rows:
         c = row["column_name"]
-        blit = F.array(*[F.lit(float(f)) for f in row["bin_frac"]])
+        blit = F.lit(np.asarray(row["bin_frac"], dtype=np.float64))
         n = F.greatest(F.col(f"{c}__n").cast("double"), F.lit(1.0))
         # pairs: (observed fraction, baseline fraction) per bin — O(1) expr tree
         pairs = F.zip_with(
@@ -207,8 +208,8 @@ def drift_verdicts(
             lambda acc: acc["ks"],
         )
         # quantile-sketch W1: mean |q_obs - q_base| over the grid, scaled by
-        # the baseline range; q_base folded in as literals (no join)
-        q_base = F.array(*[F.lit(float(v)) for v in row["quantile_v"]])
+        # the baseline range; q_base folded in as a literal (no join)
+        q_base = F.lit(np.asarray(row["quantile_v"], dtype=np.float64))
         rng_base = max(row["quantile_v"][-1] - row["quantile_v"][0], 1e-12)
         w1 = (
             F.aggregate(
@@ -219,42 +220,41 @@ def drift_verdicts(
             / F.lit(float(len(row["quantile_v"])))
             / F.lit(float(rng_base))
         )
-        staged = g.select(
-            F.col(part_col).alias("part_id"),
-            F.col(f"{c}__n").alias("n_nonnull"),
-            psi.alias("psi"),
-            ks.alias("ks"),
-            w1.alias("w1"),
-        )
-        drifted = (F.col("psi") > psi_threshold) | (F.col("ks") > ks_threshold)
-        outs.append(
-            staged.select(
-                "part_id",
+        staged.append(
+            F.struct(
                 F.lit(f"drift:{c}").alias("constraint"),
-                F.when(F.col("n_nonnull") < min_rows, F.lit(VERDICT_INSUFFICIENT))
-                .when(drifted, F.lit(VERDICT_FAIL))
-                .otherwise(F.lit(VERDICT_PASS))
-                .alias("status"),
-                F.map_from_arrays(
-                    F.array(
-                        F.lit("n_nonnull"), F.lit("psi"), F.lit("ks_binned"), F.lit("w1_norm")
-                    ),
-                    F.array(
-                        F.col("n_nonnull").cast("double"),
-                        F.col("psi"),
-                        F.col("ks"),
-                        F.col("w1"),
-                    ),
-                ).alias("metrics"),
-                F.when(
-                    drifted,
-                    F.format_string(
-                        "distribution drift psi=%.4f ks=%.4f", F.col("psi"), F.col("ks")
-                    ),
-                ).alias("detail"),
+                F.col(f"{c}__n").alias("n_nonnull"),
+                psi.alias("psi"),
+                ks.alias("ks"),
+                w1.alias("w1"),
             )
         )
-    res = outs[0]
-    for df in outs[1:]:
-        res = res.unionByName(df)
-    return res
+    # every column's (n, psi, ks, w1) goes long in ONE projection; the
+    # verdict expressions below are then built once, not once per column
+    long = g.select(F.col(part_col).alias("part_id"), F.inline(F.array(*staged)))
+    drifted = (F.col("psi") > psi_threshold) | (F.col("ks") > ks_threshold)
+    return long.select(
+        "part_id",
+        "constraint",
+        F.when(F.col("n_nonnull") < min_rows, F.lit(VERDICT_INSUFFICIENT))
+        .when(drifted, F.lit(VERDICT_FAIL))
+        .otherwise(F.lit(VERDICT_PASS))
+        .alias("status"),
+        F.map_from_arrays(
+            F.array(
+                F.lit("n_nonnull"), F.lit("psi"), F.lit("ks_binned"), F.lit("w1_norm")
+            ),
+            F.array(
+                F.col("n_nonnull").cast("double"),
+                F.col("psi"),
+                F.col("ks"),
+                F.col("w1"),
+            ),
+        ).alias("metrics"),
+        F.when(
+            drifted,
+            F.format_string(
+                "distribution drift psi=%.4f ks=%.4f", F.col("psi"), F.col("ks")
+            ),
+        ).alias("detail"),
+    )

@@ -90,69 +90,83 @@ def stats_verdicts(
 ) -> DataFrame:
     """Long-form verdicts: one row per (partition, column) with metrics map.
 
-    Pure Catalyst `when` chain over the profiled stats (U15/U16 recast).
+    Pure Catalyst `when` chain over the profiled stats (U15/U16 recast). The
+    per-column stats are turned long by ONE projection (`inline` over one
+    struct per column), so the verdict expressions are built once, not once
+    per column.
     """
-    n = F.col("n_rows").cast("double")
-    out = []
-    for c in columns:
-        nn = F.col(f"{c}__n_nonnull").cast("double")
-        null_ratio = F.when(n > 0, (n - nn) / n).otherwise(F.lit(1.0))
-        zero_ratio = F.when(n > 0, F.col(f"{c}__n_zero") / n).otherwise(F.lit(0.0))
-        variance = F.coalesce(F.col(f"{c}__var_samp"), F.lit(0.0))
-        completeness = (
-            (n / F.lit(float(expected_rows))) if expected_rows else F.lit(None).cast("double")
-        )
-        issues = F.concat_ws(
-            ",",
-            F.when(zero_ratio > ZERO_RATIO_THRESHOLD, F.lit("stalled")),
-            F.when(null_ratio > NULL_RATIO_THRESHOLD, F.lit("high_missing")),
-            F.when(
-                (variance < VARIANCE_THRESHOLD) & (null_ratio < 0.9), F.lit("stuck")
-            ),
-        )
-        status = (
-            F.when(F.col("n_rows") < min_rows, F.lit(VERDICT_INSUFFICIENT))
-            .when(issues != "", F.lit(VERDICT_FAIL))
-            .otherwise(F.lit(VERDICT_PASS))
-        )
-        metrics = F.map_from_arrays(
+    long = profile_df.select(
+        F.col(part_col).alias("part_id"),
+        "n_rows",
+        F.inline(
             F.array(
-                F.lit("n_rows"),
-                F.lit("null_ratio"),
-                F.lit("zero_ratio"),
-                F.lit("variance"),
-                F.lit("mean"),
-                F.lit("min"),
-                F.lit("max"),
-                F.lit("p25"),
-                F.lit("median"),
-                F.lit("p75"),
-                F.lit("completeness"),
-            ),
-            F.array(
-                n,
-                null_ratio,
-                zero_ratio,
-                variance,
-                F.col(f"{c}__mean"),
-                F.col(f"{c}__min"),
-                F.col(f"{c}__max"),
-                F.element_at(f"{c}__quantiles", 2),
-                F.element_at(f"{c}__quantiles", 3),
-                F.element_at(f"{c}__quantiles", 4),
-                completeness,
-            ),
-        )
-        out.append(
-            profile_df.select(
-                F.col(part_col).alias("part_id"),
-                F.lit(f"column_stats:{c}").alias("constraint"),
-                status.alias("status"),
-                metrics.alias("metrics"),
-                F.when(issues != "", issues).alias("detail"),
+                *[
+                    F.struct(
+                        F.lit(f"column_stats:{c}").alias("constraint"),
+                        F.col(f"{c}__n_nonnull").alias("n_nonnull"),
+                        F.col(f"{c}__n_zero").alias("n_zero"),
+                        F.col(f"{c}__var_samp").alias("var_samp"),
+                        F.col(f"{c}__mean").alias("mean"),
+                        F.col(f"{c}__min").alias("min"),
+                        F.col(f"{c}__max").alias("max"),
+                        F.col(f"{c}__quantiles").alias("quantiles"),
+                    )
+                    for c in columns
+                ]
             )
-        )
-    res = out[0]
-    for df in out[1:]:
-        res = res.unionByName(df)
-    return res
+        ),
+    )
+    n = F.col("n_rows").cast("double")
+    nn = F.col("n_nonnull").cast("double")
+    null_ratio = F.when(n > 0, (n - nn) / n).otherwise(F.lit(1.0))
+    zero_ratio = F.when(n > 0, F.col("n_zero") / n).otherwise(F.lit(0.0))
+    variance = F.coalesce(F.col("var_samp"), F.lit(0.0))
+    completeness = (
+        (n / F.lit(float(expected_rows))) if expected_rows else F.lit(None).cast("double")
+    )
+    issues = F.concat_ws(
+        ",",
+        F.when(zero_ratio > ZERO_RATIO_THRESHOLD, F.lit("stalled")),
+        F.when(null_ratio > NULL_RATIO_THRESHOLD, F.lit("high_missing")),
+        F.when((variance < VARIANCE_THRESHOLD) & (null_ratio < 0.9), F.lit("stuck")),
+    )
+    status = (
+        F.when(F.col("n_rows") < min_rows, F.lit(VERDICT_INSUFFICIENT))
+        .when(issues != "", F.lit(VERDICT_FAIL))
+        .otherwise(F.lit(VERDICT_PASS))
+    )
+    metrics = F.map_from_arrays(
+        F.array(
+            F.lit("n_rows"),
+            F.lit("null_ratio"),
+            F.lit("zero_ratio"),
+            F.lit("variance"),
+            F.lit("mean"),
+            F.lit("min"),
+            F.lit("max"),
+            F.lit("p25"),
+            F.lit("median"),
+            F.lit("p75"),
+            F.lit("completeness"),
+        ),
+        F.array(
+            n,
+            null_ratio,
+            zero_ratio,
+            variance,
+            F.col("mean"),
+            F.col("min"),
+            F.col("max"),
+            F.element_at("quantiles", 2),
+            F.element_at("quantiles", 3),
+            F.element_at("quantiles", 4),
+            completeness,
+        ),
+    )
+    return long.select(
+        "part_id",
+        "constraint",
+        status.alias("status"),
+        metrics.alias("metrics"),
+        F.when(issues != "", issues).alias("detail"),
+    )

@@ -4,6 +4,14 @@ Local-mode testing stands in for a multi-executor cluster; every conf here is
 one that transfers: AQE (runtime re-plan + skew-join splitting), shuffle
 partition sizing, Arrow for the pandas-UDF path, UTC session timezone (oracle
 comparability), and parquet pushdown left at defaults (on).
+
+One conf is driver-side only: `spark.python.sql.dataFrameDebugging.enabled`
+is off. PySpark 4 otherwise wraps every `functions.*` call in call-site
+capture (an active-session lookup, a conf read, a JVM origin set and clear,
+and a Python stack walk), which is most of the py4j traffic of building a
+validation plan. Plan building is a per-call driver cost, independent of
+table size, so it is paid in full on every small incremental run. What is
+lost is only the Python call site appended to analysis-error messages.
 """
 
 from __future__ import annotations
@@ -44,6 +52,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        # no per-call call-site capture in plan building (module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)

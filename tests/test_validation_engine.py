@@ -3,7 +3,9 @@ plus reference-exact edge semantics and resume invariants (SURVEY.md §5)."""
 
 import numpy as np
 import pandas as pd
+import py4j.clientserver
 import pytest
+from pyspark.errors import utils as err_utils
 from pyspark.sql import functions as F
 
 from real_time_anomaly_detection_spark import engine, manifest as mf, synth
@@ -179,6 +181,36 @@ def test_verdicts_invariant_under_repartition(spark, clips, refs, baseline_rows)
     a = v1.select("part_id", "constraint", "status").orderBy("part_id", "constraint").toPandas()
     b = v2.select("part_id", "constraint", "status").orderBy("part_id", "constraint").toPandas()
     pd.testing.assert_frame_equal(a, b)
+
+
+def test_plan_building_py4j_budget(spark, clips, refs, baseline_rows, monkeypatch):
+    """validate() only builds plans; the py4j commands it sends are a per-call
+    driver cost paid by every run. Budget ~1.25x the measured 3.5k (call-site
+    capture on and one union branch per column sent ~10-12k)."""
+    # PySpark caches the debugging flag process-wide; re-read it from this session
+    monkeypatch.setattr(err_utils, "_enable_debugging_cache", None)
+    assert err_utils.is_debugging_enabled() is False
+
+    sent = [0]
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):  # py4j's own GC deletes
+            sent[0] += 1
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counting)
+    engine.validate(
+        spark,
+        clips,
+        refs=refs,
+        baseline_rows=baseline_rows,
+        ref_pcm_fn=lambda cid: synth.reference_pcm(CFG, cid),
+        run_id="py4j-budget",
+    )
+    monkeypatch.undo()
+    engine.release("py4j-budget")
+    assert 0 < sent[0] <= 4400, f"{sent[0]} py4j commands to build one validate()"
 
 
 def test_resume_from_manifest(spark, clips, refs, baseline_rows, tmp_path):
