@@ -11,12 +11,20 @@ Subcommands mirror the engine API (SURVEY.md §7.1):
   stream-validate  continuous validation of newly-arrived clip files
               (readStream + foreachBatch over the validate engine)
   features    per-clip audio curation features + keep/drop filter
+  stream-dedup incremental near-dup detection at ingest (new docs vs the
+              accumulated corpus, MinHash-LSH candidates + exact verify)
   dedup-apply cluster accumulated near-dup pairs (connected components,
               star contraction) and write clusters/ + the deduplicated
-              survivors/ corpus from any near-dup pair table
+              survivors/ corpus — the terminal step of either dedup path
+              (stream-dedup's pairs root or any batch pair table)
   cluster-update  incrementally fold NEW pairs epochs into persisted
               cluster labels (star forest reused as state — per-update cost
-              tracks new-pair volume, not accumulated-pair volume)
+              tracks new-pair volume, not accumulated-pair volume); safe to
+              run on a cron beside stream-dedup
+  compact     rewrite the stream-dedup bands/payload stores to one file per
+              bucket (file count otherwise grows one-per-bucket-per-epoch
+              forever); crash-safe stage-then-swap, run with the stream
+              stopped
   report      assemble the JSON report document from a verdicts table (S10)
   export-csv  CSV export of any parquet table (S9, view_data.py:163-177)
   upsert      keyed MERGE of a parquet batch into a target table (S7)
@@ -257,6 +265,46 @@ def main(argv: list[str] | None = None) -> None:
                    help="emit only pairs with est_jaccard >= this floor "
                         "(keeps the O(P^2) table triage-sized)")
 
+    p = sub.add_parser("stream-dedup")
+    _add_common(p)
+    p.add_argument("--input", required=True,
+                   help="documents (or clips, --modality audio) parquet dir "
+                        "watched as a stream")
+    p.add_argument("--checkpoint", required=True)
+    p.add_argument("--out", required=True,
+                   help="output root: pairs/ + bands_store/ + docs_store/")
+    p.add_argument("--modality", choices=["text", "embedding", "audio"],
+                   default="text")
+    p.add_argument("--threshold", type=float,
+                   help="similarity floor (default: 0.5 jaccard for text, "
+                        "0.45 cosine for embedding, 1-7.5/128 fingerprint "
+                        "similarity for audio)")
+    p.add_argument("--max-bucket-size", type=int,
+                   help="LOSSY hot-bucket cap: drop LSH buckets larger than "
+                        "this before the candidate joins")
+    p.add_argument("--salt", type=int,
+                   help="EXACT hot-bucket mitigation: split each bucket's "
+                        "pair work across this many tasks")
+    p.add_argument("--store-buckets", type=int, default=64,
+                   help="hash-bucket partition count for the state stores "
+                        "(file pruning granularity)")
+    p.add_argument("--n-bands", type=int,
+                   help="LSH band count (default: derived from --threshold "
+                        "so the S-curve midpoint matches it); pinned to the "
+                        "store on first run — a mismatched re-run errors")
+    p.add_argument("--rows-per-band", type=int,
+                   help="text modality: minhash rows per band (default: "
+                        "derived from --threshold)")
+    p.add_argument("--planes-per-band", type=int,
+                   help="embedding modality: hyperplanes per band (default: "
+                        "derived from --threshold)")
+    p.add_argument("--train-planes", action="store_true",
+                   help="embedding modality: train covariance-matched planes "
+                        "on the first epoch's sample (persisted beside the "
+                        "store) instead of the fixed seeded planes")
+    p.add_argument("--continuous", action="store_true")
+    p.add_argument("--trigger", default="600 seconds")
+
     p = sub.add_parser("curate")
     _add_common(p)
     p.add_argument("--input", required=True,
@@ -378,9 +426,9 @@ def main(argv: list[str] | None = None) -> None:
     p = sub.add_parser("dedup-apply")
     _add_common(p)
     p.add_argument("--pairs", required=True,
-                   help="near-dup pairs parquet (doc_a, doc_b): an "
-                        "epoch_id=N pairs root (all epochs read) or any "
-                        "batch pair table")
+                   help="near-dup pairs parquet (doc_a, doc_b) — a "
+                        "stream-dedup out/pairs root (all epochs read) or "
+                        "any batch pair table")
     p.add_argument("--docs", required=True,
                    help="the full documents parquet to deduplicate")
     p.add_argument("--id-col", default="doc_id",
@@ -408,7 +456,7 @@ def main(argv: list[str] | None = None) -> None:
     p = sub.add_parser("cluster-update")
     _add_common(p)
     p.add_argument("--pairs", required=True,
-                   help="pairs root with epoch_id=N dirs")
+                   help="pairs root with epoch_id=N dirs (stream-dedup out)")
     p.add_argument("--out", required=True,
                    help="clusters root: clusters_store/ + clusters_head.json")
     p.add_argument("--max-iters", type=int, default=25)
@@ -416,6 +464,14 @@ def main(argv: list[str] | None = None) -> None:
                    help="keep only the newest K full label snapshots after "
                         "the head commits (default: keep all; each snapshot "
                         "is O(corpus) — prune in production)")
+
+    p = sub.add_parser("compact")
+    _add_common(p)
+    p.add_argument("--out", required=True,
+                   help="stream-dedup out root (stores + lineage)")
+    p.add_argument("--checkpoint", required=True,
+                   help="the stream's checkpoint dir (bounds the fold to "
+                        "committed epochs)")
 
     p = sub.add_parser("report")
     _add_common(p)
@@ -487,6 +543,32 @@ def main(argv: list[str] | None = None) -> None:
         print(args.out)
         return
 
+    if args.cmd == "stream-dedup":
+        from .streaming import dedup_stream
+
+        band_kwargs = {
+            k: v
+            for k, v in (("n_bands", args.n_bands),
+                         ("rows_per_band", args.rows_per_band),
+                         ("planes_per_band", args.planes_per_band))
+            if v is not None
+        } or None
+        q = dedup_stream.stream_dedup(
+            spark, args.input, args.checkpoint, args.out,
+            modality=args.modality,
+            threshold=args.threshold,
+            max_bucket_size=args.max_bucket_size,
+            salt=args.salt,
+            store_buckets=args.store_buckets,
+            available_now=not args.continuous,
+            processing_time=args.trigger,
+            band_kwargs=band_kwargs,
+            train_planes=args.train_planes,
+        )
+        q.awaitTermination()
+        print(args.out)
+        return
+
     if args.cmd == "curate":
         from .operators.curation import curate_corpus
 
@@ -545,6 +627,12 @@ def main(argv: list[str] | None = None) -> None:
                             max_iters=args.max_iters,
                             retain_snapshots=args.retain_snapshots)
         ))
+        return
+
+    if args.cmd == "compact":
+        from .streaming.dedup_stream import compact_store
+
+        print(json.dumps(compact_store(spark, args.out, args.checkpoint)))
         return
 
     if args.cmd == "partition-overlap":

@@ -97,8 +97,8 @@ def test_features_cli(spark, tmp_path):
 
 
 def test_dedup_apply_cli(spark, tmp_path):
-    """dedup-apply: cluster an epoch-partitioned pairs table and emit
-    clusters + the surviving corpus —
+    """dedup-apply: cluster a pairs table (epoch-partitioned, as
+    stream-dedup writes it) and emit clusters + the surviving corpus —
     chain {0,1,2} survives as 0, pair {10,11} as 10, loner 20 untouched."""
     pairs_root = str(tmp_path / "pairs")
     spark.createDataFrame([(0, 1), (1, 2)], "doc_a long, doc_b long").write.parquet(
