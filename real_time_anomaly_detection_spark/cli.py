@@ -21,10 +21,6 @@ Subcommands mirror the engine API (SURVEY.md §7.1):
               cluster labels (star forest reused as state — per-update cost
               tracks new-pair volume, not accumulated-pair volume); safe to
               run on a cron beside stream-dedup
-  compact     rewrite the stream-dedup bands/payload stores to one file per
-              bucket (file count otherwise grows one-per-bucket-per-epoch
-              forever); crash-safe stage-then-swap, run with the stream
-              stopped
   report      assemble the JSON report document from a verdicts table (S10)
   export-csv  CSV export of any parquet table (S9, view_data.py:163-177)
   upsert      keyed MERGE of a parquet batch into a target table (S7)
@@ -268,17 +264,12 @@ def main(argv: list[str] | None = None) -> None:
     p = sub.add_parser("stream-dedup")
     _add_common(p)
     p.add_argument("--input", required=True,
-                   help="documents (or clips, --modality audio) parquet dir "
-                        "watched as a stream")
+                   help="documents parquet dir watched as a stream")
     p.add_argument("--checkpoint", required=True)
     p.add_argument("--out", required=True,
-                   help="output root: pairs/ + bands_store/ + docs_store/")
-    p.add_argument("--modality", choices=["text", "embedding", "audio"],
-                   default="text")
+                   help="output root: pairs/ + bands_store/ + payload_store/")
     p.add_argument("--threshold", type=float,
-                   help="similarity floor (default: 0.5 jaccard for text, "
-                        "0.45 cosine for embedding, 1-7.5/128 fingerprint "
-                        "similarity for audio)")
+                   help="jaccard similarity floor (default: 0.5)")
     p.add_argument("--max-bucket-size", type=int,
                    help="LOSSY hot-bucket cap: drop LSH buckets larger than "
                         "this before the candidate joins")
@@ -293,15 +284,8 @@ def main(argv: list[str] | None = None) -> None:
                         "so the S-curve midpoint matches it); pinned to the "
                         "store on first run — a mismatched re-run errors")
     p.add_argument("--rows-per-band", type=int,
-                   help="text modality: minhash rows per band (default: "
-                        "derived from --threshold)")
-    p.add_argument("--planes-per-band", type=int,
-                   help="embedding modality: hyperplanes per band (default: "
-                        "derived from --threshold)")
-    p.add_argument("--train-planes", action="store_true",
-                   help="embedding modality: train covariance-matched planes "
-                        "on the first epoch's sample (persisted beside the "
-                        "store) instead of the fixed seeded planes")
+                   help="minhash rows per band (default: derived from "
+                        "--threshold)")
     p.add_argument("--continuous", action="store_true")
     p.add_argument("--trigger", default="600 seconds")
 
@@ -465,14 +449,6 @@ def main(argv: list[str] | None = None) -> None:
                         "the head commits (default: keep all; each snapshot "
                         "is O(corpus) — prune in production)")
 
-    p = sub.add_parser("compact")
-    _add_common(p)
-    p.add_argument("--out", required=True,
-                   help="stream-dedup out root (stores + lineage)")
-    p.add_argument("--checkpoint", required=True,
-                   help="the stream's checkpoint dir (bounds the fold to "
-                        "committed epochs)")
-
     p = sub.add_parser("report")
     _add_common(p)
     p.add_argument("--verdicts", required=True, help="verdicts parquet dir")
@@ -549,13 +525,11 @@ def main(argv: list[str] | None = None) -> None:
         band_kwargs = {
             k: v
             for k, v in (("n_bands", args.n_bands),
-                         ("rows_per_band", args.rows_per_band),
-                         ("planes_per_band", args.planes_per_band))
+                         ("rows_per_band", args.rows_per_band))
             if v is not None
         } or None
         q = dedup_stream.stream_dedup(
             spark, args.input, args.checkpoint, args.out,
-            modality=args.modality,
             threshold=args.threshold,
             max_bucket_size=args.max_bucket_size,
             salt=args.salt,
@@ -563,7 +537,6 @@ def main(argv: list[str] | None = None) -> None:
             available_now=not args.continuous,
             processing_time=args.trigger,
             band_kwargs=band_kwargs,
-            train_planes=args.train_planes,
         )
         q.awaitTermination()
         print(args.out)
@@ -627,12 +600,6 @@ def main(argv: list[str] | None = None) -> None:
                             max_iters=args.max_iters,
                             retain_snapshots=args.retain_snapshots)
         ))
-        return
-
-    if args.cmd == "compact":
-        from .streaming.dedup_stream import compact_store
-
-        print(json.dumps(compact_store(spark, args.out, args.checkpoint)))
         return
 
     if args.cmd == "partition-overlap":
@@ -969,11 +936,9 @@ def main(argv: list[str] | None = None) -> None:
         drift.make_baseline(spark.read.parquet(args.baseline)) if args.baseline else None
     )
     vcfg = engine.ValidationConfig()
-    extra_checks = [c for flag, c in (("content_dedup", "content_dedup"),
-                                      ("label_consistency", "label_consistency"),
-                                      ("speaking_rate", "speaking_rate"),
-                                      ("metadata_integrity", "metadata_integrity"))
-                    if getattr(args, flag, False)]
+    # opt-in families: each --<check-name> flag adds its family
+    extra_checks = [fam.check for fam in engine.FAMILIES
+                    if fam.check not in vcfg.checks and getattr(args, fam.check, False)]
     cps_kw = {}
     if getattr(args, "min_cps", None) is not None:
         cps_kw["min_cps"] = args.min_cps

@@ -9,6 +9,16 @@ pipeline:
                  partitions via manifest anti-join, validate only those,
                  append lineage — restart-safe, idempotent per partition.
 
+`FAMILIES` is the one ordered table of constraint families. Each entry holds
+the family's check name (as in `ValidationConfig.checks`), the validate()
+inputs it needs (`refs`, `baseline_rows`, `ref_pcm_fn`), the columns of the
+shared `meta` projection it reads, the constraint names it emits and its
+`build(run) -> (verdicts, violations)`. validate(), validate_isolated(), the
+resume gating (`ValidationConfig.runnable_constraints`) and the CLI's opt-in
+flags all read it, so a family runs exactly when its names are expected.
+Drift checks the baseline's columns (not `ValidationConfig.columns`): its
+names and `meta` columns come from the baseline rows.
+
 The per-station sequential loop of the reference (`anomaly_detector.py:431`)
 does not exist here: every constraint is a whole-table distributed job, and
 all constraints share one pruned projection of the non-binary columns that is
@@ -35,7 +45,8 @@ from __future__ import annotations
 
 import uuid
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
+from functools import cached_property
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -70,64 +81,20 @@ def release_all() -> None:
 class ValidationConfig:
     columns: tuple[str, ...] = ("sr_hz", "dur_ms")
     categorical: tuple[str, ...] = ("codec",)
-    part_col: str = "part_id"
-    min_rows: int = stats.MIN_ROWS
-    expected_rows: int | None = None
     salt_buckets: int = 16
     snr_threshold: float = audio_checks.SNR_THRESHOLD_DB
-    psi_threshold: float = drift.PSI_THRESHOLD
-    ks_threshold: float = drift.KS_THRESHOLD
-    drift_min_rows: int = drift.MIN_ROWS
-    # opt-in: 'content_dedup' catches the same audio ingested under DIFFERENT
-    # clip_ids. When the audio family is also on, its sha256 digest rides the
-    # PCM pass's Arrow batches — zero extra payload scans; with audio off it
-    # costs one map-side sha2 digest scan (the payload still never shuffles).
-    # Off by default because key uniqueness already covers re-sent rows.
-    # True: force broadcast of the refs side; False: force shuffle join;
-    # None (default): no hint — Catalyst/AQE picks by size stats. At 10^12
-    # rows the refs side is far past any broadcast threshold and a forced
-    # broadcast serializes on the driver, so auto is the scale-safe default.
-    broadcast_refs: bool | None = None
-    # opt-in 'speaking_rate': transcript-chars-per-second consistency (the
-    # wrong-pairing / truncation detector). Absolute bounds always run;
-    # group robust outliers run when speaking_rate_groups is non-empty.
+    # 'speaking_rate': absolute bounds always run; group robust outliers run
+    # when speaking_rate_groups is non-empty
     min_cps: float = speaking_rate.MIN_CPS
     max_cps: float = speaking_rate.MAX_CPS
     speaking_rate_groups: tuple[str, ...] = ("codec",)
-    # opt-in 'metadata_integrity': payload byte count vs what
-    # (sr_hz, dur_ms, codec) promise — truncated/padded/misaligned payloads
-    # and metadata lies, reference-free. Rides the PCM pass's Arrow batches
-    # when audio is on (zero extra payload scans); otherwise one map-side
-    # length(bytes) scan (8 bytes/row shuffle, never the payload).
-    # tol widens the accepted sample band by ceil(sr_hz*tol_ms/1000) for
-    # upstreams that round dur_ms instead of truncating (synth truncates).
-    integrity_tol_ms: float = 0.0
     approx: bool = True
+    # families to run, by check name (see FAMILIES); the other four are
+    # opt-in: content_dedup, label_consistency, speaking_rate,
+    # metadata_integrity
     checks: tuple[str, ...] = field(
         default=("column_stats", "uniqueness", "referential", "drift", "audio")
     )
-
-    def constraint_names(self) -> list[str]:
-        names: list[str] = []
-        if "column_stats" in self.checks:
-            names += [f"column_stats:{c}" for c in self.columns]
-        if "uniqueness" in self.checks:
-            names.append("uniqueness")
-        if "content_dedup" in self.checks:
-            names.append("content_dedup")
-        if "label_consistency" in self.checks:
-            names.append("label_consistency")
-        if "speaking_rate" in self.checks:
-            names.append("speaking_rate")
-        if "metadata_integrity" in self.checks:
-            names.append("metadata_integrity")
-        if "referential" in self.checks:
-            names.append("referential")
-        if "drift" in self.checks:
-            names += [f"drift:{c}" for c in self.columns]
-        if "audio" in self.checks:
-            names += ["pcm_check", "transcript_check"]
-        return names
 
     def runnable_constraints(
         self,
@@ -135,36 +102,220 @@ class ValidationConfig:
         baseline_rows=None,
         ref_pcm_fn=None,
     ) -> list[str]:
-        """Constraint names validate() will actually evaluate given these
-        inputs — mirrors validate()'s gating exactly, so resume counts match
-        what was runnable (not what the full config wishes for)."""
-        names: list[str] = []
-        if "column_stats" in self.checks:
-            names += [f"column_stats:{c}" for c in self.columns]
-        if "uniqueness" in self.checks:
-            names.append("uniqueness")
-        if "content_dedup" in self.checks:
-            names.append("content_dedup")
-        if "label_consistency" in self.checks:
-            names.append("label_consistency")
-        if "speaking_rate" in self.checks:
-            names.append("speaking_rate")
-        if "metadata_integrity" in self.checks:
-            names.append("metadata_integrity")
-        if "referential" in self.checks and refs is not None:
-            names.append("referential")
-        if "drift" in self.checks and baseline_rows:
-            names += [f"drift:{c}" for c in self.columns]
-        if "audio" in self.checks and refs is not None and ref_pcm_fn is not None:
-            names += ["pcm_check", "transcript_check"]
-        return names
+        """Constraint names validate() emits given these inputs — the family
+        table's gating, so resume counts what was runnable (not what the
+        full config wishes for)."""
+        return [
+            name
+            for fam in _runnable(self, refs, baseline_rows, ref_pcm_fn)
+            for name in fam.names(self, baseline_rows)
+        ]
 
 
 def profile(clips: DataFrame, cfg: ValidationConfig | None = None) -> DataFrame:
     cfg = cfg or ValidationConfig()
-    return stats.profile(
-        clips, cfg.columns, cfg.categorical, cfg.part_col, approx=cfg.approx
+    return stats.profile(clips, cfg.columns, cfg.categorical, approx=cfg.approx)
+
+
+class _Run:
+    """One validate() call: its inputs, the families that run, and the
+    memoised intermediates several families share."""
+
+    def __init__(self, clips, refs, baseline_rows, ref_pcm_fn, cfg, run_id):
+        self.clips, self.refs, self.baseline_rows = clips, refs, baseline_rows
+        self.ref_pcm_fn, self.cfg, self.run_id = ref_pcm_fn, cfg, run_id
+        self.families = _runnable(cfg, refs, baseline_rows, ref_pcm_fn)
+        self._pcm: DataFrame | Exception | None = None
+
+    def runs(self, check: str) -> bool:
+        return any(fam.check == check for fam in self.families)
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        """Persist `df` under this run's id, for release()."""
+        df = df.persist()
+        _PERSISTED.setdefault(self.run_id, []).append(df)
+        return df
+
+    @cached_property
+    def meta(self) -> DataFrame:
+        """One pruned projection of the columns the running families read;
+        `bytes` deliberately excluded so only the payload passes pay for it.
+        Persisted so the metadata families scan the source once. Columns
+        missing from `clips` are dropped here so the failure surfaces as that
+        family's status='error' verdict, not an abort before any family runs."""
+        wanted = ["part_id", "clip_id"]
+        for fam in self.families:
+            wanted += fam.meta_cols(self.cfg, self.baseline_rows)
+        have = self.clips.columns
+        return self.persist(self.clips.select(*[c for c in dict.fromkeys(wanted) if c in have]))
+
+    def pcm(self) -> DataFrame:
+        """The audio family's PCM pass (scan -> mapInPandas; `bytes` is never
+        joined or shuffled), built and persisted once: the per-clip flag rows
+        are tiny and feed verdicts, violations and the families riding the
+        pass. content_dedup/label_consistency take its sha256 digest and
+        metadata_integrity its payload length from the same Arrow batches,
+        so `bytes` is scanned once per run. A build failure is re-raised on
+        every call: the audio family records it as its one error row."""
+        if self._pcm is None:
+            try:
+                self._pcm = self.persist(audio_checks.pcm_check(
+                    self.clips, self.ref_pcm_fn, self.cfg.snr_threshold,
+                    with_digest=self.runs("content_dedup") or self.runs("label_consistency"),
+                    with_len=self.runs("metadata_integrity"),
+                ))
+            except Exception as exc:  # noqa: BLE001 — recorded by the audio family
+                self._pcm = exc
+        if isinstance(self._pcm, Exception):
+            raise self._pcm
+        return self._pcm
+
+    def shared_pcm(self) -> DataFrame | None:
+        """The PCM pass for a family that can ride it, or None when audio is
+        off or its plan failed (the caller then pays its own payload scan)."""
+        if not self.runs("audio"):
+            return None
+        try:
+            return self.pcm()
+        except Exception:  # noqa: BLE001 — the audio family records it
+            return None
+
+    @cached_property
+    def dups(self) -> DataFrame:
+        """The duplicate-content relation content_dedup and label_consistency
+        share: ONE digest agg, persisted (duplicate rows only)."""
+        checked = self.shared_pcm()
+        fp = None if checked is None else checked.select("part_id", "clip_id", "content_hash")
+        return self.persist(content_dedup.duplicate_content(self.clips, fp=fp))
+
+
+def _stats(run: _Run):
+    cfg = run.cfg
+    prof = stats.profile(run.meta, cfg.columns, cfg.categorical, approx=cfg.approx)
+    return [stats.stats_verdicts(prof, cfg.columns)], []
+
+
+def _uniqueness(run: _Run):
+    # the salted agg is the family's whole cost — run it once, persist the
+    # (small: duplicates only) result, derive verdicts AND violations from it
+    salt = run.cfg.salt_buckets
+    dups = run.persist(uniqueness.duplicate_keys(run.meta, "clip_id", "part_id", salt))
+    return (
+        [uniqueness.uniqueness_verdicts(run.meta, "clip_id", "part_id", salt, dups=dups)],
+        [uniqueness.uniqueness_violations(run.meta, "clip_id", "part_id", salt, dups=dups)],
     )
+
+
+def _integrity(run: _Run):
+    # rides the PCM pass's payload_len when audio is on; otherwise a
+    # scan-local length(bytes) projection — the payload never shuffles
+    checked = run.shared_pcm()
+    lens = (
+        metadata_integrity.payload_lengths(run.clips) if checked is None
+        else checked.select(*metadata_integrity._LEN_COLS)
+    )
+    # persisted: verdicts and violations share the classified rows
+    sig = run.persist(metadata_integrity.integrity_signals(lens))
+    return ([metadata_integrity.integrity_verdicts(sig)],
+            [metadata_integrity.integrity_violations(sig)])
+
+
+def _content_dedup(run: _Run):
+    return ([content_dedup.content_dedup_verdicts(run.clips, dups=run.dups)],
+            [content_dedup.content_dedup_violations(run.clips, dups=run.dups)])
+
+
+def _label_consistency(run: _Run):
+    # conflicts are a tiny subset of the (already tiny) dup rows; persisted
+    # so verdicts and violations share the transcript joins
+    conflicts = run.persist(label_consistency.transcript_conflicts(run.clips, dups=run.dups))
+    return (
+        [label_consistency.label_consistency_verdicts(run.clips, conflicts=conflicts)],
+        [label_consistency.label_consistency_violations(run.clips, conflicts=conflicts)],
+    )
+
+
+def _speaking_rate(run: _Run):
+    # signals are a map-side projection of the cached meta scan, persisted
+    # because verdicts, violations and the robust-outlier aggs consume them
+    cfg = run.cfg
+    sig = run.persist(speaking_rate.speaking_rate_signals(run.meta))
+    groups = tuple(g for g in cfg.speaking_rate_groups if g in sig.columns)
+    # outlier rows only (tiny); shared by verdicts + violations
+    out = run.persist(speaking_rate.speaking_rate_outliers(sig, groups)) if groups else None
+    kw = dict(min_cps=cfg.min_cps, max_cps=cfg.max_cps, signals=sig, outliers=out)
+    return ([speaking_rate.speaking_rate_verdicts(run.meta, **kw)],
+            [speaking_rate.speaking_rate_violations(run.meta, **kw)])
+
+
+def _referential(run: _Run):
+    # ONE anti-join pass, persisted (missing rows only), feeds both outputs
+    miss = run.persist(referential.missing_refs(run.meta, run.refs))
+    return ([referential.referential_verdicts(run.meta, run.refs, miss_pre=miss)],
+            [referential.referential_violations(run.meta, run.refs, miss_pre=miss)])
+
+
+def _drift(run: _Run):
+    return [drift.drift_verdicts(run.meta, run.baseline_rows)], []
+
+
+def _audio(run: _Run):
+    checked = run.pcm()
+    # transcript: small-column equi-join against refs off the cached meta
+    tr = run.persist(audio_checks.transcript_check(run.meta, run.refs))
+    return (
+        [audio_checks.pcm_verdicts(checked), audio_checks.transcript_verdicts(tr)],
+        [audio_checks.pcm_violations(checked, run.cfg.snr_threshold),
+         audio_checks.transcript_violations(tr)],
+    )
+
+
+@dataclass(frozen=True)
+class Family:
+    check: str  # its name in ValidationConfig.checks
+    needs: tuple[str, ...]  # validate() inputs it cannot run without
+    meta_cols: Callable[[ValidationConfig, list | None], list[str]]  # `meta` columns read
+    names: Callable[[ValidationConfig, list | None], list[str]]  # constraint names emitted
+    build: Callable[[_Run], tuple[list[DataFrame], list[DataFrame]]]
+
+
+def _baseline_cols(baseline_rows) -> list[str]:
+    return [row["column_name"] for row in baseline_rows]
+
+
+# Ordered: validate() builds and unions the families in this order.
+FAMILIES: tuple[Family, ...] = (
+    Family("column_stats", (), lambda cfg, b: [*cfg.columns, *cfg.categorical],
+           lambda cfg, b: [f"column_stats:{c}" for c in cfg.columns], _stats),
+    Family("uniqueness", (), lambda cfg, b: ["clip_id"],
+           lambda cfg, b: ["uniqueness"], _uniqueness),
+    # payload byte count vs what (sr_hz, dur_ms, codec) promise; reads
+    # `clips` (or the PCM pass), not `meta`
+    Family("metadata_integrity", (), lambda cfg, b: [],
+           lambda cfg, b: ["metadata_integrity"], _integrity),
+    # the same audio ingested under DIFFERENT clip_ids (opt-in: key
+    # uniqueness already covers re-sent rows)
+    Family("content_dedup", (), lambda cfg, b: [],
+           lambda cfg, b: ["content_dedup"], _content_dedup),
+    Family("label_consistency", (), lambda cfg, b: [],
+           lambda cfg, b: ["label_consistency"], _label_consistency),
+    Family("speaking_rate", (), lambda cfg, b: ["transcript", "dur_ms", "clip_id", "codec"],
+           lambda cfg, b: ["speaking_rate"], _speaking_rate),
+    Family("referential", ("refs",), lambda cfg, b: ["clip_id"],
+           lambda cfg, b: ["referential"], _referential),
+    Family("drift", ("baseline_rows",), lambda cfg, b: _baseline_cols(b),
+           lambda cfg, b: [f"drift:{c}" for c in _baseline_cols(b)], _drift),
+    Family("audio", ("refs", "ref_pcm_fn"), lambda cfg, b: ["clip_id", "transcript"],
+           lambda cfg, b: ["pcm_check", "transcript_check"], _audio),
+)
+
+
+def _runnable(cfg: ValidationConfig, refs, baseline_rows, ref_pcm_fn) -> list[Family]:
+    """The configured families whose inputs are present, in table order."""
+    have = {"refs": refs is not None, "baseline_rows": bool(baseline_rows),
+            "ref_pcm_fn": ref_pcm_fn is not None}
+    return [fam for fam in FAMILIES
+            if fam.check in cfg.checks and all(have[n] for n in fam.needs)]
 
 
 def validate(
@@ -182,213 +333,25 @@ def validate(
     Checks needing absent inputs (refs / baseline / ref_pcm_fn) are skipped.
     If `manifest_path` is given, verdicts are appended there under `run_id`.
     """
-    cfg = cfg or ValidationConfig()
-    run_id = run_id or uuid.uuid4().hex[:12]
-
-    # One pruned projection shared by all metadata-only constraints; `bytes`
-    # deliberately excluded so only the audio check pays for the payload scan.
-    # Persisted so the four metadata constraint families scan the source once.
-    # missing configured columns are dropped here so the failure surfaces as
-    # that family's status='error' verdict, not an abort before any family runs
-    audio_on = "audio" in cfg.checks and refs is not None and ref_pcm_fn is not None
-    wanted = [cfg.part_col, "clip_id", *cfg.columns, *cfg.categorical]
-    if audio_on or "speaking_rate" in cfg.checks:
-        wanted.append("transcript")  # transcript + cps checks share the meta scan
-    if "speaking_rate" in cfg.checks:
-        wanted.append("dur_ms")  # cps denominator, even if not a stats column
-    meta_cols = [c for c in dict.fromkeys(wanted) if c in clips.columns]
-    meta = clips.select(*meta_cols).persist()
-    _PERSISTED.setdefault(run_id, []).append(meta)
-
+    run = _Run(clips, refs, baseline_rows, ref_pcm_fn, cfg or ValidationConfig(),
+               run_id or uuid.uuid4().hex[:12])
     verdicts: list[DataFrame] = []
     violations: list[DataFrame] = []
-
-    def _family(name: str, build) -> None:
-        """Build one constraint family's DAG; a construction failure becomes
-        a status='error' verdict row and the run continues (T7)."""
+    for fam in run.families:
+        # a construction failure becomes a status='error' verdict row and
+        # the run continues (T7)
         try:
-            build()
+            v, viol = fam.build(run)
         except Exception as exc:  # noqa: BLE001 — any family failure is recorded
-            verdicts.append(_error_verdict(spark, name, exc))
-
-    if "column_stats" in cfg.checks:
-        def _build_stats():
-            prof = stats.profile(
-                meta, cfg.columns, cfg.categorical, cfg.part_col, approx=cfg.approx
-            )
-            verdicts.append(
-                stats.stats_verdicts(
-                    prof, cfg.columns, cfg.part_col, cfg.expected_rows, cfg.min_rows
-                )
-            )
-        _family("column_stats", _build_stats)
-    if "uniqueness" in cfg.checks:
-        def _build_uniqueness():
-            # the salted agg is the family's whole cost — run it once,
-            # persist the (small: duplicates only, MEMORY_AND_DISK spills if
-            # a pathological input makes it large) result, derive verdicts
-            # AND violations from it instead of re-aggregating per output
-            dups = uniqueness.duplicate_keys(
-                meta, "clip_id", cfg.part_col, cfg.salt_buckets
-            ).persist()
-            _PERSISTED[run_id].append(dups)
-            verdicts.append(
-                uniqueness.uniqueness_verdicts(
-                    meta, "clip_id", cfg.part_col, cfg.salt_buckets, dups=dups
-                )
-            )
-            violations.append(
-                uniqueness.uniqueness_violations(
-                    meta, "clip_id", cfg.part_col, cfg.salt_buckets, dups=dups
-                )
-            )
-        _family("uniqueness", _build_uniqueness)
-    # The PCM pass is built BEFORE the content_dedup family: when both are
-    # enabled, the sha256 digest rides out of the PCM scan's Arrow batches
-    # (pcm_check with_digest) so `bytes` is scanned exactly ONCE per run —
-    # previously each family paid its own payload scan (VERDICT r3 #6). A
-    # pcm-plan construction failure records the audio family's error verdict
-    # and content_dedup falls back to its own digest scan.
-    checked: DataFrame | None = None
-    if audio_on:
-        def _build_pcm():
-            nonlocal checked
-            # pcm: scan -> mapInPandas, `bytes` never joined/shuffled; persist
-            # the per-clip flag rows (tiny) so the decode/SNR UDF pass over
-            # the binary payload runs exactly once for verdicts AND violations
-            checked = audio_checks.pcm_check(
-                clips, ref_pcm_fn, cfg.snr_threshold,
-                with_digest="content_dedup" in cfg.checks
-                or "label_consistency" in cfg.checks,
-                with_len="metadata_integrity" in cfg.checks,
-            ).persist()
-            _PERSISTED[run_id].append(checked)
-        _family("audio", _build_pcm)
-
-    if "metadata_integrity" in cfg.checks:
-        def _build_integrity():
-            # rides the PCM pass's payload_len when audio is on (ONE payload
-            # scan for pcm + digest + length); with audio off, a scan-local
-            # length(bytes) projection — the payload itself never shuffles
-            lens = (
-                checked.select(*metadata_integrity._LEN_COLS)
-                if checked is not None and "payload_len" in checked.columns
-                else metadata_integrity.payload_lengths(clips, cfg.part_col)
-            )
-            # persisted: verdicts and violations share the classified rows
-            sig = metadata_integrity.integrity_signals(
-                lens, cfg.integrity_tol_ms
-            ).persist()
-            _PERSISTED[run_id].append(sig)
-            verdicts.append(metadata_integrity.integrity_verdicts(sig))
-            violations.append(metadata_integrity.integrity_violations(sig))
-        _family("metadata_integrity", _build_integrity)
-
-    # content_dedup and label_consistency share ONE persisted duplicate-
-    # content relation (and, transitively, the PCM pass's digest): the
-    # lazy getter builds it on first demand from whichever family runs
-    # first, so enabling both costs one digest agg, not two.
-    _dups_shared: list[DataFrame] = []
-
-    def _get_dups() -> DataFrame:
-        if not _dups_shared:
-            fp = (
-                checked.select("part_id", "clip_id", "content_hash")
-                if checked is not None
-                else None  # audio off (or its plan failed): own digest scan
-            )
-            # ONE digest agg, persisted (duplicate rows only)
-            d = content_dedup.duplicate_content(clips, cfg.part_col, fp=fp).persist()
-            _PERSISTED[run_id].append(d)
-            _dups_shared.append(d)
-        return _dups_shared[0]
-
-    if "content_dedup" in cfg.checks:
-        def _build_content_dedup():
-            dups = _get_dups()
-            verdicts.append(
-                content_dedup.content_dedup_verdicts(clips, cfg.part_col, dups=dups)
-            )
-            violations.append(
-                content_dedup.content_dedup_violations(clips, cfg.part_col, dups=dups)
-            )
-        _family("content_dedup", _build_content_dedup)
-    if "label_consistency" in cfg.checks:
-        def _build_label_consistency():
-            # conflicts are a tiny subset of the (already tiny) dup rows;
-            # persist so verdicts and violations share the transcript joins
-            conflicts = label_consistency.transcript_conflicts(
-                clips, cfg.part_col, dups=_get_dups()
-            ).persist()
-            _PERSISTED[run_id].append(conflicts)
-            verdicts.append(label_consistency.label_consistency_verdicts(
-                clips, cfg.part_col, conflicts=conflicts))
-            violations.append(label_consistency.label_consistency_violations(
-                clips, cfg.part_col, conflicts=conflicts))
-        _family("label_consistency", _build_label_consistency)
-    if "speaking_rate" in cfg.checks:
-        def _build_speaking_rate():
-            # signals are a map-side projection of the cached meta scan;
-            # persisted because verdicts, violations and (optionally) the
-            # robust-outlier aggs all consume them
-            sig = speaking_rate.speaking_rate_signals(meta, cfg.part_col).persist()
-            _PERSISTED[run_id].append(sig)
-            out = None
-            groups = tuple(g for g in cfg.speaking_rate_groups if g in sig.columns)
-            if groups:
-                # outlier rows only (tiny); shared by verdicts + violations
-                out = speaking_rate.speaking_rate_outliers(sig, groups).persist()
-                _PERSISTED[run_id].append(out)
-            verdicts.append(speaking_rate.speaking_rate_verdicts(
-                meta, cfg.part_col, cfg.min_cps, cfg.max_cps,
-                signals=sig, outliers=out))
-            violations.append(speaking_rate.speaking_rate_violations(
-                meta, cfg.part_col, cfg.min_cps, cfg.max_cps,
-                signals=sig, outliers=out))
-        _family("speaking_rate", _build_speaking_rate)
-    if "referential" in cfg.checks and refs is not None:
-        def _build_referential():
-            # same share-the-intermediate play: ONE anti-join pass, persisted
-            # (missing rows only), feeds both outputs
-            miss = referential.missing_refs(meta, refs, cfg.broadcast_refs).persist()
-            _PERSISTED[run_id].append(miss)
-            verdicts.append(
-                referential.referential_verdicts(meta, refs, cfg.broadcast_refs, miss_pre=miss)
-            )
-            violations.append(
-                referential.referential_violations(meta, refs, cfg.broadcast_refs, miss_pre=miss)
-            )
-        _family("referential", _build_referential)
-    if "drift" in cfg.checks and baseline_rows:
-        def _build_drift():
-            verdicts.append(
-                drift.drift_verdicts(
-                    meta,
-                    baseline_rows,
-                    cfg.part_col,
-                    cfg.psi_threshold,
-                    cfg.ks_threshold,
-                    cfg.drift_min_rows,
-                )
-            )
-        _family("drift", _build_drift)
-    if audio_on and checked is not None:  # None => _build_pcm already errored
-        def _build_audio():
-            verdicts.append(audio_checks.pcm_verdicts(checked))
-            violations.append(audio_checks.pcm_violations(checked, cfg.snr_threshold))
-            # transcript: small-column equi-join against refs (off the shared
-            # cached meta projection)
-            tr = audio_checks.transcript_check(meta, refs, cfg.broadcast_refs).persist()
-            _PERSISTED[run_id].append(tr)
-            verdicts.append(audio_checks.transcript_verdicts(tr))
-            violations.append(audio_checks.transcript_violations(tr))
-        _family("audio", _build_audio)
+            v, viol = [_error_verdict(spark, fam.check, exc)], []
+        verdicts += v
+        violations += viol
 
     verdicts_df = _union(spark, verdicts, PARTITION_VERDICTS)
     violations_df = _union(spark, violations, VIOLATIONS)
 
     if manifest_path:
-        mf.append_manifest(verdicts_df, run_id, manifest_path)
+        mf.append_manifest(verdicts_df, run.run_id, manifest_path)
     return verdicts_df, violations_df
 
 
@@ -418,11 +381,10 @@ def validate_isolated(
     done with them."""
     cfg = cfg or ValidationConfig()
     run_id = run_id or uuid.uuid4().hex[:12]
-    from dataclasses import replace as _replace
 
     verdicts: list[DataFrame] = []
     violations: list[DataFrame] = []
-    for check in cfg.checks:
+    for check in [fam.check for fam in _runnable(cfg, refs, baseline_rows, ref_pcm_fn)]:
         sub_rid = f"{run_id}:{check}"
         try:
             v, viol = validate(
@@ -431,7 +393,7 @@ def validate_isolated(
                 refs=refs,
                 baseline_rows=baseline_rows,
                 ref_pcm_fn=ref_pcm_fn,
-                cfg=_replace(cfg, checks=(check,)),
+                cfg=replace(cfg, checks=(check,)),
                 run_id=sub_rid,
             )
             v, viol = v.persist(), viol.persist()
@@ -478,18 +440,14 @@ def incremental_validate(
     # (e.g. no ref_pcm_fn from the CLI) would leave every partition forever
     # "pending" and re-validated each run.
     n_constraints = len(cfg.runnable_constraints(refs, baseline_rows, ref_pcm_fn))
-    pend = mf.pending_partitions(
-        clips.select(cfg.part_col).alias("p").withColumnRenamed(cfg.part_col, "part_id"),
-        man,
-        n_constraints,
-    )
+    pend = mf.pending_partitions(clips, man, n_constraints)
     pend_ids = [r.part_id for r in pend.collect()]
     if not pend_ids:
         return (
             spark.createDataFrame([], PARTITION_VERDICTS),
             spark.createDataFrame([], VIOLATIONS),
         )
-    subset = clips.filter(F.col(cfg.part_col).isin(pend_ids))
+    subset = clips.filter(F.col("part_id").isin(pend_ids))
     return validate(
         spark,
         subset,

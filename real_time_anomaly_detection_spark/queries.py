@@ -1569,17 +1569,14 @@ _ND_PLANES = _nd_planes()
 
 
 def _nd_bands_expr(emb_col: str, n_bands: int = _ND_BANDS,
-                   planes_per_band: int = _ND_PLANES_PER_BAND,
-                   planes: list | None = None):
-    """[(band, bucket)] array column for the banded cosine LSH — shared by
-    q42 and the streaming embedding dedup. `n_bands`/`planes_per_band` set
+                   planes_per_band: int = _ND_PLANES_PER_BAND):
+    """[(band, bucket)] array column for the banded cosine LSH (q42's small
+    geometries). `n_bands`/`planes_per_band` set
     the recall/candidate-volume trade: a RANDOM pair collides on a band
     with prob 0.5^planes_per_band, so at scale the band width must be
     matched to the verify threshold (see q42's docstring). Defaults
-    reproduce the oracle-pinned 6x2 configuration (same LCG plane stream);
-    `planes` overrides them (trained covariance-matched planes, r5)."""
-    if planes is None:
-        planes = _nd_planes(n_bands * planes_per_band)
+    reproduce the oracle-pinned 6x2 configuration (same LCG plane stream)."""
+    planes = _nd_planes(n_bands * planes_per_band)
 
     def _dot_lit(plane):
         arr = F.array(*[F.lit(v) for v in plane])
@@ -1607,8 +1604,7 @@ def _nd_bands_expr(emb_col: str, n_bands: int = _ND_BANDS,
 
 
 def _nd_bands_rows(e, n_bands: int, planes_per_band: int,
-                   id_col: str = "doc_id", emb_col: str = "emb",
-                   planes: list | None = None):
+                   id_col: str = "doc_id", emb_col: str = "emb"):
     """(id, band, bucket) rows for the banded cosine LSH, choosing the
     implementation by geometry width:
 
@@ -1624,9 +1620,8 @@ def _nd_bands_rows(e, n_bands: int, planes_per_band: int,
       into per-band buckets with a bit-weight matvec, all in the batch.
 
     Both paths emit identical schemas; at a given geometry every caller
-    (batch q42, streaming _emb_bands) uses the same path, so Spark-vs-Spark
-    equivalence (stream == batch) is preserved bit-for-bit."""
-    if n_bands * planes_per_band <= 12 and planes is None:
+    uses the same path."""
+    if n_bands * planes_per_band <= 12:
         return e.select(
             id_col, F.explode(_nd_bands_expr(emb_col, n_bands, planes_per_band)).alias("bb")
         ).select(
@@ -1638,9 +1633,7 @@ def _nd_bands_rows(e, n_bands: int, planes_per_band: int,
     import numpy as np
     import pandas as pd
 
-    if planes is None:
-        planes = _nd_planes(n_bands * planes_per_band)
-    planes_t = np.asarray(planes, dtype=np.float64).T
+    planes_t = np.asarray(_nd_planes(n_bands * planes_per_band), dtype=np.float64).T
     weights = (1 << np.arange(planes_per_band, dtype=np.int64))
 
     def bands_batches(batches):

@@ -1,27 +1,22 @@
-"""Incremental near-duplicate detection at ingest time (streaming dedup),
-for ALL THREE modalities: text (MinHash-LSH, the q34 pipeline), embeddings
-(banded cosine-LSH, the q42 pipeline), and audio (whole-clip spectral
-fingerprints + banded Hamming, the operators/audio_fingerprint.py
-pipeline; the per-epoch payload decode runs ONCE — bands derive from the
-persisted fingerprint relation, not a second scan, and only the 8x8-byte
-fingerprint ever enters the stores or shuffles).
+"""Incremental near-duplicate detection at ingest time (streaming dedup)
+over text documents (MinHash-LSH, the q34 pipeline).
 
 The batch dedup family answers "which pairs in this corpus are near-dups?";
 a 100 TB ingest pipeline instead asks, PER ARRIVING BATCH, "which of these
 new items duplicate something we already hold?" — re-running the all-corpus
-job per batch is O(corpus) per epoch and unusable. This module recasts both
-LSH pipelines onto the collector loop (readStream + foreachBatch, the same
+job per batch is O(corpus) per epoch and unusable. This module recasts the
+LSH pipeline onto the collector loop (readStream + foreachBatch, the same
 T1/T2/T5 skeleton as streaming/incremental.py):
 
   per micro-batch:
-    1. band the new items — same md5-portable minhash (text) / LCG sign
-       planes (embeddings) as the batch queries, so streamed results are
-       bit-identical to the batch pipeline's on the same corpus;
+    1. band the new items — same md5-portable minhash as the batch query,
+       so streamed results are bit-identical to the batch pipeline's on the
+       same corpus;
     2. candidates = new-bands JOIN accumulated-bands-store (new vs
        EVERYTHING seen so far) UNION new-bands self-join (within-batch
        pairs) — both keyed on (band, bucket), never all-pairs;
-    3. verify the exact similarity (hashed-token Jaccard / cosine) on
-       candidates only, reading payloads from the store + the batch;
+    3. verify the exact hashed-token Jaccard on candidates only, reading
+       payloads from the store + the batch;
     4. append the batch's bands + payloads to the stores, epoch-keyed
        (overwrite-own-epoch => a retried epoch replaces its partial output —
        same idempotency contract as stream_validate);
@@ -64,29 +59,19 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators import audio_fingerprint as _afp
 from ..queries import (
-    _cosine_row_prob,
     _hashed_tokens,
     _lsh_candidate_pairs,
     _mh_bands_rows,
-    _nd_bands_rows,
     _resolve_banding,
 )
 
 DOCS_SCHEMA = "doc_id long, text string"
-EMB_SCHEMA = "doc_id long, embedding array<float>"
-CLIPS_SCHEMA = "clip_id string, bytes binary, sr_hz long, codec string"
 JACCARD_THRESHOLD = 0.5
-COSINE_THRESHOLD = 0.45
 STORE_BUCKETS = 64  # bump at real scale so small batches prune hard
-AUDIO_DURATION_BAND_S = 2.0  # same valve as audio_fingerprint.neardup_pairs
-# chunk-vs-duration fusion stride: dq = dur/2s reaches 1e6 only past a
-# 23-DAY clip — any real dq sits far below, so +-1 stays within one chunk
-_AUDIO_DQ_STRIDE = 1_000_000
 
 
-# ---------------------------------------------------------------- modalities
+# ---------------------------------------------------------------- text items
 
 def _text_prepare(batch: DataFrame) -> DataFrame:
     """(doc_id, payload) with payload = 60-bit hashed token array."""
@@ -106,163 +91,6 @@ def _jaccard(ca: str, cb: str):
     return n_common / (F.size(ca) + F.size(cb) - n_common)
 
 
-def _emb_prepare(batch: DataFrame) -> DataFrame:
-    return batch.select(
-        "doc_id", F.transform("embedding", lambda x: x.cast("double")).alias("payload")
-    )
-
-
-def _emb_bands(batch: DataFrame, n_bands: int = 6,
-               planes_per_band: int = 2) -> DataFrame:
-    """Banding must be threshold-matched at scale (see q42's docstring: a
-    geometry mismatched to the threshold is candidate-dense for any sizeable
-    clustered corpus); `stream_dedup` resolves the geometry from the
-    threshold by default and threads explicit `band_kwargs` here. Delegates
-    to queries._nd_bands_rows, so wide production geometries take the same
-    vectorized numpy path as batch q42 — streamed and batch bands are
-    bit-identical at any geometry."""
-    emb = F.transform("embedding", lambda x: x.cast("double"))
-    return _nd_bands_rows(
-        batch.select("doc_id", emb.alias("_e")),
-        n_bands, planes_per_band, id_col="doc_id", emb_col="_e",
-    )
-
-
-def _cosine(ca: str, cb: str):
-    dot = F.aggregate(
-        F.zip_with(F.col(ca), F.col(cb), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(F.col(c), F.lit(0.0), lambda acc, v: acc + v * v)
-    )
-    return dot / (norm(ca) * norm(cb))
-
-
-def _audio_prepare(batch: DataFrame) -> DataFrame:
-    """(doc_id, payload, dur_s) with payload = the whole-clip 128-bit
-    fingerprint as 8 x 16-bit chunks (operators/audio_fingerprint.py) —
-    ONE mapInPandas decode+FFT pass; `bytes` never leaves the map stage.
-    dur_s rides along for the duration-keyed band buckets (and lands in
-    the payload store as lineage). Undecodable / too-short clips are
-    DROPPED here: an item with no fingerprint cannot be deduplicated, and
-    decode-error REPORTING is the validation engine's job (audio_checks),
-    not the dedup stream's."""
-    fps = _afp.fingerprints(
-        batch.select(
-            F.lit(0).alias("part_id"),
-            F.col("doc_id").alias("clip_id"),
-            "bytes", "sr_hz", "codec",
-        )
-    )
-    return fps.filter(F.col("fp_ok")).select(
-        F.col("clip_id").alias("doc_id"), F.col("bands").alias("payload"),
-        "dur_s",
-    )
-
-
-def _audio_bands(pay: DataFrame, n_bands: int = 8,
-                 bits_per_band: int = 16,
-                 duration_band_s: float = AUDIO_DURATION_BAND_S) -> DataFrame:
-    """(doc_id, band, bucket) from the PREPARED payload relation — the
-    audio modality's bands derive from prepare()'s output (bands_source =
-    'payload' in _MODALITIES) so the expensive decode scan runs once per
-    epoch. Chunk geometry is FIXED by the fingerprint definition (8
-    chunks x 16 bits, `audio_fingerprint._AF_CHUNKS`); the n_bands/
-    bits_per_band arguments exist only to satisfy the modality contract
-    and are validated in stream_dedup.
-
-    The bucket value FUSES the 16-bit chunk with the quantized duration:
-    bucket = chunk * _AUDIO_DQ_STRIDE + floor(dur_s / duration_band_s) —
-    the same scale valve as the batch join (audio_fingerprint.py): a bare
-    65,536-value band space saturates around 10^9 stored clips, while
-    whole-clip duplicates preserve seconds exactly, so duration multiplies
-    bucket diversity at zero recall cost. Adjacent duration buckets stay
-    ADJACENT INTEGERS under the fusion (the stride dwarfs any sane dq), so
-    the probe side covers quantization boundaries by exploding bucket+-1
-    (`_audio_probe_expand`) — pairs whose durations differ by <
-    duration_band_s are never lost, matching the batch join's exact
-    single-sided +-1 window."""
-    dq = F.greatest(
-        F.floor(F.col("dur_s") / F.lit(float(duration_band_s))), F.lit(0)
-    ).cast("long")
-    chunks = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                (
-                    F.col("payload").getItem(b).cast("long")
-                    * F.lit(_AUDIO_DQ_STRIDE)
-                    + dq
-                ).alias("bucket"),
-            )
-            for b in range(_afp._AF_CHUNKS)
-        ]
-    )
-    return pay.select("doc_id", F.explode(chunks).alias("bb")).select(
-        "doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
-
-
-def _audio_probe_expand(bands: DataFrame) -> DataFrame:
-    """The probe-side duration-adjacency explode: each band row also probes
-    the two neighboring duration buckets (bucket +- 1 under the fused
-    encoding). Build/store rows stay exact, so the admitted window is
-    |dq delta| <= 1 — identical to the batch join's. A bucket-1 underflow
-    at dq=0 probes the previous chunk's impossible max-dq region (stride
-    >> any real dq), which matches nothing."""
-    return bands.withColumn(
-        "bucket",
-        F.explode(
-            F.array(
-                F.col("bucket") - 1, F.col("bucket"), F.col("bucket") + 1
-            )
-        ),
-    )
-
-
-def _audio_sim(ca: str, cb: str):
-    """similarity = 1 - hamming/128 over the chunked fingerprints — the
-    Hamming verify of audio_fingerprint.neardup_pairs recast as the store
-    pipeline's similarity-floor contract."""
-    ham = F.aggregate(
-        F.zip_with(
-            F.col(ca), F.col(cb), lambda p, q: F.bit_count(p.bitwiseXOR(q))
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    return F.lit(1.0) - ham / F.lit(float(_afp._AF_BITS))
-
-
-# default floor accepts hamming <= _AF_HAM_MAX (the batch default) and
-# rejects _AF_HAM_MAX+1; the half-step keeps the 6-dp similarity rounding
-# in _verify away from the decision boundary
-AUDIO_SIM_THRESHOLD = 1.0 - (_afp._AF_HAM_MAX + 0.5) / _afp._AF_BITS
-
-
-
-# (schema, id_col, prepare, bands_fn, bands_source, probe_expand, sim_fn,
-#  default_threshold, per_row_prob, rows-knob name) — per_row_prob feeds
-# the threshold->banding derivation (identity for Jaccard, the hyperplane
-# map for cosine; None+None = fixed geometry, audio). bands_source says
-# what bands_fn consumes: the raw batch ("raw") or prepare()'s output
-# ("payload" — used when prepare is the expensive scan to run once).
-# probe_expand (or None) widens the PROBE side of every candidate join
-# (audio: duration-bucket adjacency) while store/build rows stay exact.
-_MODALITIES = {
-    "text": (DOCS_SCHEMA, "doc_id", _text_prepare, _text_bands, "raw",
-             None, _jaccard, JACCARD_THRESHOLD, None, "rows_per_band"),
-    "embedding": (EMB_SCHEMA, "doc_id", _emb_prepare, _emb_bands, "raw",
-                  None, _cosine, COSINE_THRESHOLD, _cosine_row_prob,
-                  "planes_per_band"),
-    "audio": (CLIPS_SCHEMA, "clip_id", _audio_prepare, _audio_bands,
-              "payload", _audio_probe_expand, _audio_sim,
-              AUDIO_SIM_THRESHOLD, None, None),
-}
-
-
 # ---------------------------------------------------------------- shared core
 
 def _sbucket(n: int):
@@ -274,32 +102,28 @@ def _pbucket(col: str, n: int):
 
 
 def _verify(cands: DataFrame, pay_a: DataFrame, pay_b: DataFrame,
-            sim_fn, threshold: float,
-            size_prefilter: bool = False) -> DataFrame:
+            threshold: float) -> DataFrame:
     pa = pay_a.select(F.col("doc_id").alias("doc_a"), F.col("payload").alias("pa"))
     pb = pay_b.select(F.col("doc_id").alias("doc_b"), F.col("payload").alias("pb"))
-    if size_prefilter:
-        # Exact Jaccard size bound (J <= min-size/max-size): drop
-        # size-incompatible candidate pairs on 8-byte size columns BEFORE
-        # the wide token-array rows shuffle into the verify joins. Only
-        # valid for set-overlap similarities (text modality); cosine is
-        # scale-invariant so sizes bound nothing there. Slack matches the
-        # batch pipeline (rounded-similarity final filter).
-        sa = pa.select("doc_a", F.size("pa").alias("_sza"))
-        sb = pb.select("doc_b", F.size("pb").alias("_szb"))
-        cands = (
-            cands.join(sa, "doc_a")
-            .join(sb, "doc_b")
-            .filter(
-                F.least("_sza", "_szb")
-                >= (threshold - 1e-6) * F.greatest("_sza", "_szb")
-            )
-            .select("doc_a", "doc_b")
+    # Exact Jaccard size bound (J <= min-size/max-size): drop size-
+    # incompatible candidate pairs on 8-byte size columns BEFORE the wide
+    # token-array rows shuffle into the verify joins. Slack matches the
+    # batch pipeline (rounded-similarity final filter).
+    sa = pa.select("doc_a", F.size("pa").alias("_sza"))
+    sb = pb.select("doc_b", F.size("pb").alias("_szb"))
+    cands = (
+        cands.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .filter(
+            F.least("_sza", "_szb")
+            >= (threshold - 1e-6) * F.greatest("_sza", "_szb")
         )
+        .select("doc_a", "doc_b")
+    )
     return (
         cands.join(pa, "doc_a")
         .join(pb, "doc_b")
-        .withColumn("similarity", F.round(sim_fn("pa", "pb"), 6))
+        .withColumn("similarity", F.round(_jaccard("pa", "pb"), 6))
         .filter(F.col("similarity") >= threshold)
         .select("doc_a", "doc_b", "similarity")
     )
@@ -356,8 +180,8 @@ STORE_META_FILE = "store_meta.json"
 
 
 def _check_store_meta(out_dir: str, meta: dict) -> None:
-    """Pin the store-layout parameters (bucket modulus, band geometry,
-    modality) to the store's lifetime: written once when the store is
+    """Pin the store-layout parameters (bucket modulus, band geometry) to
+    the store's lifetime: written once when the store is
     created, validated on every later invocation. A mismatch is a hard
     error — the caller either passes the stored values or starts a fresh
     out_dir. (At real scale this marker lives in the Iceberg table's
@@ -370,7 +194,7 @@ def _check_store_meta(out_dir: str, meta: dict) -> None:
             raise ValueError(
                 "store-layout parameters differ from the values this store "
                 f"was created with: stored {existing}, requested {meta}. "
-                "Changing store_buckets/band geometry/modality invalidates "
+                "Changing store_buckets/band geometry invalidates "
                 "the accumulated bands/payload stores (partition pruning and "
                 "band collisions would use the wrong layout, silently "
                 "dropping cross-batch pairs). Re-run with the stored values "
@@ -394,7 +218,7 @@ def _check_store_meta(out_dir: str, meta: dict) -> None:
                 "and adopting the current defaults could silently change "
                 "the geometry it was built with. Backfill the marker with "
                 "the legacy values (write store_meta.json matching the "
-                "original run's modality/store_buckets/banding) or start a "
+                "original run's store_buckets/banding) or start a "
                 "fresh out_dir."
             )
         os.makedirs(out_dir, exist_ok=True)
@@ -404,8 +228,6 @@ def _check_store_meta(out_dir: str, meta: dict) -> None:
         os.replace(tmp, path)
 
 
-PLANES_FILE = "planes.json"
-_PLANES_SAMPLE_CAP = 4096
 SNAPSHOT_DIR = "store_snapshots"
 
 
@@ -468,14 +290,6 @@ def verify_store_lineage(out_dir: str, checkpoint_dir: str) -> dict:
       append — the retry overwrites it); below the committed head it means
       corruption.
 
-    Compaction (``compact_store``) folds store epochs <= its record's
-    ``compacted_through`` into the single epoch dir ``epoch_id=T``; with the
-    record present, the stores are required to hold {T} plus every lineage
-    epoch above T (pairs/ is never compacted — all lineage epochs stay
-    required there). A half-finished compaction (no record yet, stores
-    already rewritten) therefore fails the missing-epochs check LOUDLY;
-    re-running compact_store heals it.
-
     Returns {"epochs": [...], "checkpoint_commits": [...]} when consistent;
     raises ValueError otherwise. Runs automatically at stream start."""
     lineage = {r["epoch_id"] for r in store_snapshots(out_dir)}
@@ -497,21 +311,14 @@ def verify_store_lineage(out_dir: str, checkpoint_dir: str) -> dict:
             "out_dir."
         )
     head = max(lineage) if lineage else -1
-    ct = compacted_through(out_dir)
     for artifact in ("pairs", "bands_store", "payload_store"):
         root = os.path.join(out_dir, artifact)
-        required = lineage
-        if artifact != "pairs" and ct >= 0:
-            # compacted stores hold one merged dir at epoch_id=ct plus any
-            # epochs committed after the compaction
-            required = {e for e in lineage if e > ct} | ({ct} & lineage)
-        missing = required - _epoch_dirs(root)
+        missing = lineage - _epoch_dirs(root)
         if missing:
             raise ValueError(
                 f"committed epochs {sorted(missing)} are missing from "
                 f"{artifact} — state lost after commit (the snapshot is "
-                "written only after every epoch artifact is on disk), or a "
-                "compaction crashed mid-swap (re-run compact_store to heal)"
+                "written only after every epoch artifact is on disk)"
             )
         orphans = {
             e for e in _epoch_dirs(root) if e not in lineage and e <= head
@@ -524,222 +331,11 @@ def verify_store_lineage(out_dir: str, checkpoint_dir: str) -> dict:
     return {"epochs": sorted(lineage), "checkpoint_commits": sorted(commits)}
 
 
-COMPACTION_FILE = "compaction.json"
-
-
-def compacted_through(out_dir: str) -> int:
-    """Epoch through which compact_store folded the stores; -1 if never."""
-    path = os.path.join(out_dir, COMPACTION_FILE)
-    if not os.path.exists(path):
-        return -1
-    with open(path) as f:
-        return int(json.load(f)["compacted_through"])
-
-
-def _store_files(root: str) -> int:
-    n = 0
-    for _, _, files in os.walk(root):
-        n += sum(1 for f in files if f.endswith(".parquet"))
-    return n
-
-
-def _swap_in(root: str, stage_root: str, t: int) -> None:
-    """Commit a READY stage: remove the folded source epoch dirs, then
-    rename the staged epoch_id=<t> dir into the store."""
-    import shutil
-
-    for e in sorted(_epoch_dirs(root)):
-        if e <= t:
-            shutil.rmtree(os.path.join(root, f"epoch_id={e}"))
-    os.rename(os.path.join(stage_root, f"epoch_id={t}"),
-              os.path.join(root, f"epoch_id={t}"))
-
-
-def _compact_one(spark: SparkSession, root: str, target: int,
-                 shape_fn, n_buckets: int) -> None:
-    """Fold every epoch dir <= target of ONE store into a single
-    epoch_id=<target> dir, one file per bucket partition.
-
-    Crash-safe resume: the folded relation is STAGED under
-    root/.compacting/epoch_id=<target> (a dot-dir, invisible to Spark's
-    reader) and only once its _SUCCESS marker exists are the source epoch
-    dirs removed and the staged dir renamed in (_swap_in). A re-run after
-    any crash either resumes the staged swap (stage complete — nothing is
-    recomputed), or recomputes from the untouched source dirs (stage
-    incomplete — nothing was deleted yet). A READY stage for an OLDER
-    target is committed first, never discarded: its rows may be the only
-    copy of source dirs the interrupted run already deleted."""
-    import shutil
-
-    stage_root = os.path.join(root, ".compacting")
-    if os.path.isdir(stage_root):
-        for d in os.listdir(stage_root):
-            if not d.startswith("epoch_id="):
-                continue
-            t_old = int(d.split("=", 1)[1])
-            if t_old != target and os.path.exists(
-                os.path.join(stage_root, d, "_SUCCESS")
-            ):
-                _swap_in(root, stage_root, t_old)
-    stage = os.path.join(stage_root, f"epoch_id={target}")
-    if not os.path.exists(os.path.join(stage, "_SUCCESS")):
-        if os.path.isdir(stage_root):
-            shutil.rmtree(stage_root)  # partial stage: sources untouched
-        folded = shape_fn(
-            spark.read.parquet(root).filter(F.col("epoch_id") <= target)
-        )
-        part_col = "sbucket" if "sbucket" in folded.columns else "pbucket"
-        (
-            folded.repartition(n_buckets, F.col(part_col))
-            .write.partitionBy(part_col)
-            .mode("overwrite")
-            .parquet(stage)
-        )
-    _swap_in(root, stage_root, target)
-    shutil.rmtree(stage_root, ignore_errors=True)
-
-
-def compact_store(spark: SparkSession, out_dir: str,
-                  checkpoint_dir: str) -> dict:
-    """Rewrite the accumulated bands/payload stores to ONE file per bucket
-    (VERDICT r5 #3): the epoch writes append one file per bucket per epoch,
-    so listing/footer cost grows with store AGE even when partition pruning
-    keeps scanned BYTES flat (r3 measured +35% epoch wall by epoch 9 from
-    file count alone). Run with the stream stopped.
-
-    Read semantics are preserved exactly:
-    - bands: the candidate join consumes the (doc_id, band, bucket) SET, so
-      folding is a DISTINCT across epochs — stale band rows of re-ingested
-      docs are kept (they can still surface candidates whose verify runs
-      against the keep-latest payload, exactly as before);
-    - payload: the read side keeps max-epoch per doc, so folding applies
-      keep-latest per doc_id before collapsing to the target epoch.
-
-    Folded rows land in epoch_id=T, T = min(lineage head, last
-    checkpoint-committed batch): an in-flight epoch (stores written,
-    checkpoint commit missing) stays UNfolded so its retry still excludes
-    its own partial state via the `epoch_id < current` read filter.
-
-    Crash-safety: stage-then-swap per store (_compact_one), the
-    compaction record committed LAST. Any mid-swap crash fails the next
-    stream start loudly (verify_store_lineage's missing-epochs check) and
-    re-running compact_store heals it."""
-    lineage = {r["epoch_id"] for r in store_snapshots(out_dir)}
-    commits_dir = os.path.join(checkpoint_dir, "commits")
-    commits = set()
-    if os.path.isdir(commits_dir):
-        for f in os.listdir(commits_dir):
-            if f.isdigit():
-                commits.add(int(f))
-    if not lineage or not commits:
-        return {"compacted_through": compacted_through(out_dir),
-                "skipped": "no committed epochs"}
-    target = min(max(lineage), max(commits))
-    with open(os.path.join(out_dir, STORE_META_FILE)) as f:
-        n_buckets = json.load(f)["store_buckets"]
-
-    bands_root = os.path.join(out_dir, "bands_store")
-    pay_root = os.path.join(out_dir, "payload_store")
-    files_before = _store_files(bands_root) + _store_files(pay_root)
-
-    latest = Window.partitionBy("doc_id")
-
-    def bands_shape(df):
-        return df.select("doc_id", "band", "bucket", "sbucket").distinct()
-
-    def pay_shape(df):
-        return (
-            df.withColumn("_mx", F.max("epoch_id").over(latest))
-            .filter(F.col("epoch_id") == F.col("_mx"))
-            .select("doc_id", "payload", "pbucket")
-        )
-
-    for root, shape in ((bands_root, bands_shape), (pay_root, pay_shape)):
-        if any(e <= target for e in _epoch_dirs(root)):
-            _compact_one(spark, root, target, shape, n_buckets)
-
-    import time
-
-    path = os.path.join(out_dir, COMPACTION_FILE)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"compacted_through": int(target), "at": time.time()}, f)
-    os.replace(tmp, path)
-    return {"compacted_through": int(target),
-            "files_before": files_before,
-            "files_after": _store_files(bands_root) + _store_files(pay_root)}
-
-
-def _train_cov_planes(batch_df: DataFrame, n_planes: int) -> list:
-    """Covariance-matched sign planes (VERDICT r4 #6): planes = unit rows of
-    G @ Sigma^(1/2), where G is the SAME seeded LCG +-1 direction stream the
-    fixed path uses and Sigma is the covariance of a bounded deterministic
-    sample (orderBy doc_id, limit cap) of unit-normalized first-epoch
-    vectors. Mechanism: matching the projection to the data covariance
-    enlarges |u.x| for typical corpus vectors, so a near-dup pair's sign
-    bits flip less often — measured on the planted clustered corpus,
-    trained recall beats fixed at equal (tight) band geometry
-    (tests/test_dedup_stream.py). Training is metadata-sized (<= cap rows
-    to the driver — the bounded-sample pattern of _ivf_trained_centroids)
-    and bit-deterministic, so a retried first epoch retrains identically."""
-    import numpy as np
-
-    from ..queries import _nd_planes
-
-    pdf = (
-        batch_df.select("doc_id", "embedding")
-        .filter(F.col("embedding").isNotNull())
-        .orderBy("doc_id")
-        .limit(_PLANES_SAMPLE_CAP)
-        .toPandas()
-    )
-    if not len(pdf):
-        # an all-null first batch trains nothing: fall back to the fixed
-        # LCG planes (unit rows of g), identical to train_planes=False
-        g = np.asarray(_nd_planes(n_planes), dtype=np.float64)
-        gn = np.linalg.norm(g, axis=1, keepdims=True)
-        gn[gn == 0] = 1.0
-        return [[float(a) for a in row] for row in g / gn]
-    x = np.stack(pdf["embedding"].apply(lambda v: np.asarray(v, dtype=np.float64)))
-    nrm = np.linalg.norm(x, axis=1, keepdims=True)
-    nrm[nrm == 0] = 1.0
-    x = x / nrm
-    g = np.asarray(_nd_planes(n_planes), dtype=np.float64)
-    c = np.cov(x.T) + 1e-9 * np.eye(x.shape[1])
-    w, v = np.linalg.eigh(c)
-    half = v @ np.diag(np.sqrt(np.maximum(w, 0.0))) @ v.T
-    planes = g @ half
-    pn = np.linalg.norm(planes, axis=1, keepdims=True)
-    pn[pn == 0] = 1.0
-    planes = planes / pn
-    return [[float(a) for a in row] for row in planes]
-
-
-def _load_or_train_planes(out_dir: str, batch_df: DataFrame,
-                          n_planes: int) -> list:
-    """Train once on the first epoch, persist beside the stores, reload ever
-    after — band geometry AND plane values are store-lifetime state (a crash
-    after the write reloads them; a crash before retrains bit-identically
-    from the same deterministic sample)."""
-    path = os.path.join(out_dir, PLANES_FILE)
-    if os.path.exists(path):
-        with open(path) as f:
-            return json.load(f)
-    planes = _train_cov_planes(batch_df, n_planes)
-    os.makedirs(out_dir, exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(planes, f)
-    os.replace(tmp, path)
-    return planes
-
-
 def stream_dedup(
     spark: SparkSession,
     input_path: str,
     checkpoint_dir: str,
     out_dir: str,
-    modality: str = "text",
     threshold: float | None = None,
     max_bucket_size: int | None = None,
     salt: int | None = None,
@@ -747,81 +343,31 @@ def stream_dedup(
     available_now: bool = True,
     processing_time: str = "600 seconds",
     band_kwargs: dict | None = None,
-    train_planes: bool = False,
 ):
-    """Watch `input_path` for new files of the given modality ("text",
-    "embedding", or "audio"); emit verified near-dup pairs per epoch under
-    `out_dir`/pairs/epoch_id=N. `doc_a` is the previously-seen (or
-    lower-id within-batch) item, `doc_b` the new one (audio: clip_ids —
-    the stores and pairs carry them as string doc_id/doc_a/doc_b).
-    `max_bucket_size`/`salt` are the hot-bucket mitigations from the batch
-    pipelines, applied to both the within-batch and store joins.
-    Band geometry DEFAULTS to the threshold-matched derivation
-    (queries._banding_for) for both modalities; `band_kwargs` overrides it
-    explicitly (text: n_bands/rows_per_band; embedding:
-    n_bands/planes_per_band — e.g. the round-4 hand-tuned
-    dict(n_bands=6, planes_per_band=12) at threshold=0.9).
-    Store-layout parameters (modality, store_buckets, band geometry) are
-    pinned to the store's lifetime via a marker file written on first run
-    and validated on every later run — a mismatched re-invocation raises
+    """Watch `input_path` for new document files (DOCS_SCHEMA); emit
+    verified near-dup pairs per epoch under `out_dir`/pairs/epoch_id=N.
+    `doc_a` is the previously-seen (or lower-id within-batch) item, `doc_b`
+    the new one. `max_bucket_size`/`salt` are the hot-bucket mitigations
+    from the batch pipeline, applied to both the within-batch and store
+    joins. Band geometry DEFAULTS to the threshold-matched derivation
+    (queries._banding_for); `band_kwargs` (n_bands/rows_per_band) overrides
+    it explicitly.
+    Store-layout parameters (store_buckets, band geometry) are pinned to
+    the store's lifetime via a marker file written on first run and
+    validated on every later run — a mismatched re-invocation raises
     instead of silently dropping cross-batch pairs. Returns the
     StreamingQuery."""
-    (schema, id_col, prepare, bands_fn, bands_source, probe_expand, sim_fn,
-     default_thr, row_prob, rows_key) = _MODALITIES[modality]
-    threshold = default_thr if threshold is None else threshold
     # Resolve the band geometry ONCE, before anything touches the store:
     # explicit band_kwargs win; otherwise it is derived from the threshold
     # (queries._banding_for — the scale-safe default, VERDICT r4 #1).
+    threshold = JACCARD_THRESHOLD if threshold is None else threshold
     kw = dict(band_kwargs or {})
-    if rows_key is None:
-        # fixed-geometry modality (audio): the fingerprint definition IS
-        # the banding — _AF_CHUNKS x 16-bit chunks — so there is nothing to
-        # derive or override. Banded recall is EXACT (pigeonhole) only for
-        # thresholds admitting hamming <= n_chunks-1; a lower floor would
-        # silently miss pairs sharing no clean chunk, which is precisely
-        # the failure class this module's guards exist to prevent — raise.
-        if kw:
-            raise ValueError(
-                f"band_kwargs not supported for {modality}: the geometry is "
-                "fixed by the fingerprint definition (8 x 16-bit chunks)")
-        nb = _afp._AF_CHUNKS
-        rows = _afp._AF_BITS // _afp._AF_CHUNKS
-        # the INTEGER hamming ceiling this floor admits (similarities are
-        # exact multiples of 1/128, so floor() is the right cast)
-        h_max = int((1.0 - threshold) * _afp._AF_BITS + 1e-9)
-        if h_max > nb - 1:
-            raise ValueError(
-                f"threshold {threshold} admits hamming {h_max} > {nb - 1}, "
-                f"past the {nb}-chunk pigeonhole recall guarantee; lowest "
-                f"exact floor is {1.0 - (nb - 1) / _afp._AF_BITS}")
-        banding = {"n_bands": nb, "bits_per_band": rows,
-                   "duration_band_s": AUDIO_DURATION_BAND_S}
-    else:
-        unknown = set(kw) - {"n_bands", rows_key}
-        if unknown:
-            raise ValueError(
-                f"unknown band_kwargs for {modality}: {sorted(unknown)}")
-        nb, rows = _resolve_banding(
-            kw.get("n_bands"), kw.get(rows_key), threshold, row_prob
-        )
-        banding = {"n_bands": nb, rows_key: rows}
-    if train_planes and modality != "embedding":
-        raise ValueError("train_planes applies to the embedding modality only")
-    if train_planes:
-        # planes are trained on the FIRST epoch's sample and persisted
-        # beside the stores; later epochs (and restarts) reload them, so
-        # every band row ever written used the same planes
-        def bands_of(b):
-            planes = _load_or_train_planes(out_dir, b, nb * rows)
-            return _nd_bands_rows(
-                b.select(
-                    "doc_id",
-                    F.transform("embedding", lambda x: x.cast("double")).alias("_e"),
-                ),
-                nb, rows, id_col="doc_id", emb_col="_e", planes=planes,
-            )
-    else:
-        bands_of = lambda b: bands_fn(b, nb, rows)  # noqa: E731
+    unknown = set(kw) - {"n_bands", "rows_per_band"}
+    if unknown:
+        raise ValueError(f"unknown band_kwargs: {sorted(unknown)}")
+    nb, rows = _resolve_banding(
+        kw.get("n_bands"), kw.get("rows_per_band"), threshold, None
+    )
     # Store-layout parameters are baked into the accumulated stores: the
     # partition IN-filters are computed with store_buckets as the modulus
     # against partitions WRITTEN with it, and the band geometry determines
@@ -829,14 +375,15 @@ def stream_dedup(
     # values against an existing store would silently drop cross-batch pairs
     # — so the RESOLVED values are persisted in a marker on first run and
     # validated ever after (a threshold change that re-derives a different
-    # geometry trips the same guard).
+    # geometry trips the same guard). "modality"/"trained_planes" are the
+    # fixed values earlier versions also wrote, so their stores still match.
     _check_store_meta(
         out_dir,
         {
-            "modality": modality,
+            "modality": "text",
             "store_buckets": store_buckets,
-            "banding": banding,
-            "trained_planes": train_planes,
+            "banding": {"n_bands": nb, "rows_per_band": rows},
+            "trained_planes": False,
         },
     )
     bands_store = os.path.join(out_dir, "bands_store")
@@ -847,45 +394,18 @@ def stream_dedup(
     # store epochs below the lineage head fails HERE, before any batch runs
     verify_store_lineage(out_dir, checkpoint_dir)
 
-    stream = spark.readStream.schema(schema).parquet(input_path)
+    stream = spark.readStream.schema(DOCS_SCHEMA).parquet(input_path)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if id_col != "doc_id":
-            batch_df = batch_df.withColumnRenamed(id_col, "doc_id")
         batch_df = batch_df.dropDuplicates(["doc_id"]).persist()
-        cached = [batch_df]
-        new_pay = prepare(batch_df)
-        if bands_source == "payload":
-            # prepare() is the expensive payload scan (audio: decode+FFT);
-            # persist it and derive bands FROM it so the scan runs once per
-            # epoch — never once for bands and again for the store write
-            new_pay = new_pay.persist()
-            cached.append(new_pay)
-            new_bands = bands_of(new_pay).persist()
-        else:
-            new_bands = bands_of(batch_df).persist()
-        cached.append(new_bands)
-        # probe rows: the modality may widen the probe side (audio:
-        # duration-bucket adjacency) — store/build rows stay exact, so the
-        # admitted window matches the batch join's single-sided +-1
-        if probe_expand is not None:
-            probe_bands = probe_expand(new_bands).persist()
-            cached.append(probe_bands)
-        else:
-            probe_bands = new_bands
+        new_pay = _text_prepare(batch_df)
+        new_bands = _text_bands(batch_df, nb, rows).persist()
+        cached = [batch_df, new_bands]
 
         # within-batch pairs: the batch helper verbatim (bucketed self-join,
-        # ordered doc_a < doc_b, probe repartition + cap/salt knobs). With a
-        # probe expansion, the self-join runs exact-vs-expanded through the
-        # two-sided helper instead (both orientations appear; the unordered
-        # pair collapse below dedupes them).
-        if probe_expand is not None:
-            within = _cross_candidates(new_bands, probe_bands,
-                                       max_bucket_size, salt)
-        else:
-            within = _lsh_candidate_pairs(new_bands, max_bucket_size, salt)
-        pairs = _verify(within, new_pay, new_pay, sim_fn, threshold,
-                        size_prefilter=(modality == "text"))
+        # ordered doc_a < doc_b, probe repartition + cap/salt knobs)
+        within = _lsh_candidate_pairs(new_bands, max_bucket_size, salt)
+        pairs = _verify(within, new_pay, new_pay, threshold)
 
         # cross-batch pairs: new items vs the accumulated store. 'Store
         # absent' is a filesystem probe on BOTH stores, NOT a caught read
@@ -899,7 +419,7 @@ def stream_dedup(
             # partition IN-filter => file-level pruning, store-size-independent
             touched = [
                 r[0]
-                for r in probe_bands.select(_sbucket(store_buckets).alias("sb"))
+                for r in new_bands.select(_sbucket(store_buckets).alias("sb"))
                 .distinct()
                 .collect()
             ]
@@ -911,7 +431,7 @@ def stream_dedup(
                 .select("doc_id", "band", "bucket")
             )
             cross = _cross_candidates(
-                old_bands, probe_bands, max_bucket_size, salt
+                old_bands, new_bands, max_bucket_size, salt
             ).persist()
             cached.append(cross)
             # prune the payload read to the candidate pairs' pbuckets; the
@@ -935,8 +455,7 @@ def stream_dedup(
                 .select("doc_id", "payload")
             )
             pairs = pairs.unionByName(
-                _verify(cross, old_pay, new_pay, sim_fn, threshold,
-                        size_prefilter=(modality == "text"))
+                _verify(cross, old_pay, new_pay, threshold)
             )
 
         # one row per unordered pair: a doc re-ingested alongside its twin

@@ -293,8 +293,7 @@ def test_update_clusters_snapshot_retention(spark, tmp_path):
 def test_string_id_clusters_and_update_flow(spark, tmp_path):
     """STRING ids (audio clip_ids) through the whole cluster stack: both
     batch algorithms agree with a Python union-find under lexicographic
-    min-labels, and update_clusters folds string-id pairs epochs — the
-    path `stream-dedup --modality audio` pairs take into cluster-update."""
+    min-labels, and update_clusters folds string-id pairs epochs."""
     import os
 
     from real_time_anomaly_detection_spark.operators.components import (

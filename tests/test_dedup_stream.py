@@ -74,131 +74,6 @@ def test_redrain_without_new_files_is_noop(spark, tmp_path):
     assert spark.read.parquet(os.path.join(out, "pairs")).count() == before
 
 
-def test_embedding_stream_dedup_matches_batch(spark, tmp_path):
-    """Embedding modality: streamed pairs equal the batch q42 pipeline's on
-    the unioned corpus, including cross-batch near-dup discovery."""
-    import numpy as np
-
-    from real_time_anomaly_detection_spark.queries import q42_embedding_neardup_lsh
-
-    rng = np.random.default_rng(7)
-    base = rng.normal(size=(6, 64))
-
-    def vec(i, noise=0.0):
-        v = base[i] + noise * rng.normal(size=64)
-        return [float(x) for x in v]
-
-    b1 = pd.DataFrame({"doc_id": [0, 1, 2],
-                       "embedding": [vec(0), vec(1), vec(2)]})
-    # 10 is a near-copy of 0 (cross-batch), 11 near-copy of 1, 12 independent
-    b2 = pd.DataFrame({"doc_id": [10, 11, 12],
-                       "embedding": [vec(0, 0.05), vec(1, 0.05), vec(5)]})
-
-    src = str(tmp_path / "es_src")
-    out = str(tmp_path / "es_out")
-    ckpt = str(tmp_path / "es_ckpt")
-    for pdf in (b1, b2):
-        spark.createDataFrame(pdf, "doc_id long, embedding array<float>") \
-            .coalesce(1).write.mode("append").parquet(src)
-        q = dedup_stream.stream_dedup(spark, src, ckpt, out, modality="embedding")
-        q.awaitTermination()
-    got = spark.read.parquet(os.path.join(out, "pairs")).toPandas()
-    got_pairs = {frozenset((a, b)) for a, b in zip(got.doc_a, got.doc_b)}
-
-    all_dir = str(tmp_path / "es_all")
-    allp = pd.concat([b1, b2]).rename(columns={"doc_id": "vec_id"})
-    spark.createDataFrame(allp, "vec_id long, embedding array<float>") \
-        .write.parquet(os.path.join(all_dir, "embeddings.parquet"))
-    truth = q42_embedding_neardup_lsh(spark, all_dir).toPandas()
-    truth_pairs = {frozenset((a, b)) for a, b in zip(truth.vec_a, truth.vec_b)}
-    assert got_pairs == truth_pairs
-    assert frozenset((0, 10)) in got_pairs  # cross-batch near-copy found
-    assert frozenset((1, 11)) in got_pairs
-    assert not any(12 in p for p in got_pairs)
-
-
-def test_audio_stream_dedup_matches_batch(spark, tmp_path):
-    """Audio modality: streamed pairs equal the batch audio_fingerprint
-    pipeline's on the unioned clips corpus — cross-batch perceptual dups
-    (gain change, μ-law re-encode) found at ingest, similarity = the batch
-    Hamming recast as 1 - h/128, undecodable rows dropped pair-free, and
-    the fixed 8x16-bit geometry guarded (threshold floor + band_kwargs +
-    cross-modality marker all raise)."""
-    import numpy as np
-    import pytest
-
-    from real_time_anomaly_detection_spark.audio import codecs
-    from real_time_anomaly_detection_spark.operators import audio_fingerprint as AFP
-
-    sr = 16000
-    t = np.arange(sr) / sr
-
-    def tone(fs, amps):
-        return sum(a * np.sin(2 * np.pi * f * t) for f, a in zip(fs, amps))
-
-    x = tone((440, 1300, 2500), (1.0, 0.5, 0.25))
-    y = tone((700, 2100), (1.0, 0.4))
-    z = tone((300, 900, 3300), (0.8, 0.6, 0.3))
-    b1 = [
-        ("c1", codecs.pcm16_encode(x), sr, "pcm16"),
-        ("c2", codecs.pcm16_encode(0.5 * x), sr, "pcm16"),  # within-batch dup
-        ("c3", codecs.pcm16_encode(y), sr, "pcm16"),
-    ]
-    b2 = [
-        ("c10", codecs.ulaw_encode(0.8 * x), sr, "ulaw"),   # cross-batch dup
-        ("c11", codecs.pcm16_encode(z), sr, "pcm16"),
-        ("bad", b"\x01", sr, "nosuchcodec"),                # undecodable
-    ]
-    src = str(tmp_path / "as_src")
-    out = str(tmp_path / "as_out")
-    ckpt = str(tmp_path / "as_ckpt")
-    for rows in (b1, b2):
-        spark.createDataFrame(rows, dedup_stream.CLIPS_SCHEMA) \
-            .coalesce(1).write.mode("append").parquet(src)
-        q = dedup_stream.stream_dedup(spark, src, ckpt, out, modality="audio")
-        q.awaitTermination()
-    got = spark.read.parquet(os.path.join(out, "pairs"))
-    got_pdf = got.toPandas()
-    got_pairs = _norm(got_pdf)
-
-    all_clips = spark.createDataFrame(
-        [(0, *r) for r in b1 + b2],
-        "part_id int, clip_id string, bytes binary, sr_hz long, codec string",
-    )
-    truth = AFP.neardup_pairs(AFP.fingerprints(all_clips)).toPandas()
-    assert got_pairs == {
-        frozenset((a, b)) for a, b in zip(truth.clip_a, truth.clip_b)}
-    assert frozenset(("c1", "c2")) in got_pairs    # within-batch
-    assert frozenset(("c1", "c10")) in got_pairs   # cross-batch, re-encoded
-    assert not any("bad" in p for p in got_pairs)
-    assert not any("c3" in p or "c11" in p for p in got_pairs)
-    # similarity is the batch Hamming recast: 1 - h/128, 6-dp rounded
-    tv = {frozenset((a, b)): h
-          for a, b, h in zip(truth.clip_a, truth.clip_b, truth.hamming)}
-    for a, b, s in zip(got_pdf.doc_a, got_pdf.doc_b, got_pdf.similarity):
-        assert s == round(1.0 - tv[frozenset((a, b))] / 128.0, 6)
-    # cross-batch pair attributed to the arrival epoch
-    e1 = got.filter(F.col("epoch_id") == 1).toPandas()
-    assert frozenset(("c1", "c10")) in _norm(e1)
-
-    # redrain without new files: no-op
-    before = got.count()
-    dedup_stream.stream_dedup(spark, src, ckpt, out,
-                              modality="audio").awaitTermination()
-    assert spark.read.parquet(os.path.join(out, "pairs")).count() == before
-
-    # guards: threshold past the pigeonhole bound; caller-supplied geometry;
-    # a different modality against this store's marker
-    with pytest.raises(ValueError, match="pigeonhole"):
-        dedup_stream.stream_dedup(spark, src, ckpt, out, modality="audio",
-                                  threshold=0.9)
-    with pytest.raises(ValueError, match="fixed by the fingerprint"):
-        dedup_stream.stream_dedup(spark, src, ckpt, out, modality="audio",
-                                  band_kwargs={"n_bands": 4})
-    with pytest.raises(ValueError, match="store-layout parameters differ"):
-        dedup_stream.stream_dedup(spark, src, ckpt, out, modality="text")
-
-
 def test_reingested_doc_id_does_not_self_pair(spark, tmp_path):
     """A document re-sent in a later batch (same doc_id, same text) must not
     emit a (x, x, 1.0) self-pair from the cross-batch join."""
@@ -345,57 +220,8 @@ def test_checkpoint_replay_of_partial_epoch_is_exact(spark, tmp_path):
     assert os.path.isdir(os.path.join(out, "bands_store", "epoch_id=1"))
 
 
-def test_embedding_stream_threshold_matched_banding(spark, tmp_path):
-    """Round 4: `band_kwargs` threads the threshold-matched banding (q42's
-    scale configuration) into the streaming embedding dedup. On a clustered
-    corpus with planted cosine~0.997 duplicates split across two batches,
-    the 6x12-plane stream at threshold 0.9 finds exactly the planted pairs —
-    including the cross-batch ones — matching batch
-    q42(n_bands=6, planes_per_band=12, threshold=0.9) on the union."""
-    import numpy as np
-    import pandas as pd
-
-    from real_time_anomaly_detection_spark.queries import q42_embedding_neardup_lsh
-
-    rng = np.random.RandomState(3)
-    n, dim = 400, 64
-    x = rng.normal(size=(n, dim))
-    x += (rng.normal(size=(10, dim)) * 0.5)[np.arange(n) % 10]
-    for p in range(10):
-        x[2 * p + 1] = x[2 * p] + rng.normal(size=dim) * 0.01
-    rows = [{"doc_id": i, "embedding": [float(v) for v in x[i]]} for i in range(n)]
-    # split so 5 planted pairs straddle the batch boundary
-    b1, b2 = rows[:15] + rows[20:210], rows[15:20] + rows[210:]
-
-    src = str(tmp_path / "es_src")
-    out = str(tmp_path / "es_out")
-    ckpt = str(tmp_path / "es_ckpt")
-    kw = dict(n_bands=6, planes_per_band=12)
-    for pdf in (b1, b2):
-        spark.createDataFrame(pd.DataFrame(pdf), "doc_id long, embedding array<float>") \
-            .coalesce(1).write.mode("append").parquet(src)
-        q = dedup_stream.stream_dedup(
-            spark, src, ckpt, out, modality="embedding",
-            threshold=0.9, band_kwargs=kw,
-        )
-        q.awaitTermination()
-
-    got = _norm(spark.read.parquet(os.path.join(out, "pairs")).toPandas())
-    planted = {frozenset((2 * p, 2 * p + 1)) for p in range(10)}
-    assert got == planted
-
-    all_dir = str(tmp_path / "all")
-    allp = pd.DataFrame(rows).rename(columns={"doc_id": "vec_id"})
-    spark.createDataFrame(allp, "vec_id long, embedding array<float>").write.parquet(
-        os.path.join(all_dir, "embeddings.parquet"))
-    truth = q42_embedding_neardup_lsh(
-        spark, all_dir, n_bands=6, planes_per_band=12, threshold=0.9
-    ).toPandas()
-    assert got == _norm(truth.rename(columns={"vec_a": "doc_a", "vec_b": "doc_b"}))
-
-
 def test_store_meta_pins_layout_parameters(spark, tmp_path):
-    """ADVICE r4 (medium): store_buckets (and band geometry / modality) are
+    """ADVICE r4 (medium): store_buckets (and band geometry) are
     baked into the accumulated store layout; a later invocation with a
     different value must raise, not silently drop cross-batch pairs."""
     import pytest
@@ -411,9 +237,6 @@ def test_store_meta_pins_layout_parameters(spark, tmp_path):
     # different store_buckets against the same store: hard error
     with pytest.raises(ValueError, match="store-layout parameters differ"):
         dedup_stream.stream_dedup(spark, src, ckpt, out, store_buckets=8)
-    # different modality against the same store: hard error
-    with pytest.raises(ValueError, match="store-layout parameters differ"):
-        dedup_stream.stream_dedup(spark, src, ckpt, out, modality="embedding")
 
 
 def test_markerless_populated_store_raises(spark, tmp_path):
@@ -439,65 +262,6 @@ def test_markerless_populated_store_raises(spark, tmp_path):
         f.write(stored)
     q = dedup_stream.stream_dedup(spark, src, ckpt, out)
     q.awaitTermination()
-
-
-def test_trained_planes_beat_fixed_at_equal_bands(spark, tmp_path):
-    """VERDICT r4 #6: covariance-matched planes trained on the first epoch's
-    bounded sample must recover MORE planted cross/within-batch pairs than
-    the fixed LCG planes at the SAME (tight) band geometry, on a clustered
-    corpus whose planted pairs sit at cosine ~0.987. Also pins plane
-    persistence: planes.json is written on epoch 0 and reloaded on epoch 1,
-    so every band row in the store used identical planes."""
-    import numpy as np
-    import pandas as pd
-
-    def unit(m):
-        n = np.linalg.norm(m, axis=1, keepdims=True)
-        n[n == 0] = 1.0
-        return m / n
-
-    rng = np.random.RandomState(3)
-    n, dim = 400, 64
-    x = rng.normal(size=(n, dim))
-    x += (rng.normal(size=(10, dim)) * 0.5)[np.arange(n) % 10]
-    for p in range(20):
-        x[2 * p + 1] = x[2 * p] + rng.normal(size=dim) * 0.18
-    xn = unit(x)
-    rows = [{"doc_id": i, "embedding": [float(v) for v in xn[i]]} for i in range(n)]
-    b1, b2 = rows[:300], rows[300:]
-    planted = {frozenset((2 * p, 2 * p + 1)) for p in range(20)}
-    kw = dict(n_bands=2, planes_per_band=16)
-
-    def run(root, train):
-        src, out, ckpt = (str(tmp_path / f"{root}_{d}") for d in ("src", "out", "ck"))
-        for pdf in (b1, b2):
-            spark.createDataFrame(pd.DataFrame(pdf),
-                                  "doc_id long, embedding array<float>") \
-                .coalesce(1).write.mode("append").parquet(src)
-            q = dedup_stream.stream_dedup(
-                spark, src, ckpt, out, modality="embedding",
-                threshold=0.9, band_kwargs=kw, train_planes=train,
-            )
-            q.awaitTermination()
-        got = _norm(spark.read.parquet(os.path.join(out, "pairs")).toPandas())
-        return got, out
-
-    fixed_pairs, _ = run("fx", False)
-    trained_pairs, tout = run("tr", True)
-    assert os.path.exists(os.path.join(tout, dedup_stream.PLANES_FILE))
-    # precision stays exact (every pair verified at cosine >= 0.9)
-    assert fixed_pairs <= planted and trained_pairs <= planted
-    assert len(trained_pairs) > len(fixed_pairs), (
-        f"trained {len(trained_pairs)} <= fixed {len(fixed_pairs)}")
-    # mismatched train_planes flag against an existing store is a hard error
-    import pytest
-
-    with pytest.raises(ValueError, match="store-layout parameters differ"):
-        dedup_stream.stream_dedup(
-            spark, str(tmp_path / "tr_src"), str(tmp_path / "tr_ck"), tout,
-            modality="embedding", threshold=0.9, band_kwargs=kw,
-            train_planes=False,
-        )
 
 
 def test_store_lineage_detects_mismatch_and_loss(spark, tmp_path):
@@ -572,84 +336,6 @@ def test_dedup_apply_over_streamed_pairs(spark, tmp_path):
     assert survivors == [1, 3, 12]
 
 
-def test_audio_stream_duration_valve(spark, tmp_path):
-    """The stream's fused duration buckets match the batch join's valve:
-    a stationary mixture at 1s vs 7s has an IDENTICAL fingerprint (band
-    fractions are duration-invariant) but must NOT pair — far-apart
-    durations are never whole-clip dups — while 1.9s vs 2.1s (adjacent
-    duration buckets at the 2s band) MUST pair via the probe-side +-1
-    explode, including across batches through the store. The marker pins
-    duration_band_s."""
-    import json
-
-    import numpy as np
-
-    from real_time_anomaly_detection_spark.audio import codecs
-
-    sr = 16000
-
-    def mix(dur_s):
-        t = np.arange(int(dur_s * sr)) / sr
-        return np.sin(2 * np.pi * 440 * t) + 0.5 * np.sin(2 * np.pi * 1300 * t)
-
-    b1 = [
-        ("s1", codecs.pcm16_encode(mix(1.0)), sr, "pcm16"),
-        ("e19", codecs.pcm16_encode(mix(1.9)), sr, "pcm16"),
-    ]
-    b2 = [
-        ("s7", codecs.pcm16_encode(mix(7.0)), sr, "pcm16"),       # same fp as s1
-        ("e21", codecs.pcm16_encode(0.5 * mix(2.1)), sr, "pcm16"),  # boundary dup
-    ]
-    src = str(tmp_path / "dv_src")
-    out = str(tmp_path / "dv_out")
-    ckpt = str(tmp_path / "dv_ckpt")
-    for rows in (b1, b2):
-        spark.createDataFrame(rows, dedup_stream.CLIPS_SCHEMA) \
-            .coalesce(1).write.mode("append").parquet(src)
-        dedup_stream.stream_dedup(spark, src, ckpt, out,
-                                  modality="audio").awaitTermination()
-    got = _norm(spark.read.parquet(os.path.join(out, "pairs")).toPandas())
-    assert frozenset(("e19", "e21")) in got   # cross-batch, adjacent buckets
-    assert not any("s1" in p and "s7" in p for p in got)  # valve blocks
-    meta = json.load(open(os.path.join(out, "store_meta.json")))
-    assert meta["banding"]["duration_band_s"] == 2.0
-
-
-def test_dedup_apply_over_audio_stream_pairs(spark, tmp_path):
-    """The audio stream's pairs root (string clip_ids) composes with
-    dedup-apply via --id-col: the clips corpus is deduplicated to one
-    keeper per perceptual-duplicate cluster, original schema preserved."""
-    import numpy as np
-
-    from real_time_anomaly_detection_spark import cli
-    from real_time_anomaly_detection_spark.audio import codecs
-
-    sr = 16000
-    t = np.arange(sr) / sr
-    x = np.sin(2 * np.pi * 440 * t) + 0.5 * np.sin(2 * np.pi * 1300 * t)
-    y = np.sin(2 * np.pi * 700 * t) + 0.4 * np.sin(2 * np.pi * 2100 * t)
-    rows = [
-        ("c1", codecs.pcm16_encode(x), sr, "pcm16"),
-        ("c2", codecs.pcm16_encode(0.5 * x), sr, "pcm16"),
-        ("c3", codecs.ulaw_encode(0.8 * x), sr, "ulaw"),
-        ("k1", codecs.pcm16_encode(y), sr, "pcm16"),
-    ]
-    src = str(tmp_path / "da_src")
-    out = str(tmp_path / "da_out")
-    ckpt = str(tmp_path / "da_ckpt")
-    spark.createDataFrame(rows, dedup_stream.CLIPS_SCHEMA) \
-        .coalesce(1).write.parquet(src)
-    dedup_stream.stream_dedup(spark, src, ckpt, out,
-                              modality="audio").awaitTermination()
-
-    applied = str(tmp_path / "da_applied")
-    cli.main(["dedup-apply", "--pairs", os.path.join(out, "pairs"),
-              "--docs", src, "--id-col", "clip_id", "--out", applied])
-    survivors = spark.read.parquet(os.path.join(applied, "survivors"))
-    assert sorted(r.clip_id for r in survivors.collect()) == ["c1", "k1"]
-    assert survivors.columns[0] == "clip_id"  # original schema preserved
-
-
 def test_cluster_update_incremental_over_streamed_pairs(spark, tmp_path):
     """VERDICT r5 #2 E2E: cluster-update folds stream-dedup's pairs root
     incrementally (one call per ingest epoch, reusing the persisted star
@@ -688,83 +374,3 @@ def test_cluster_update_incremental_over_streamed_pairs(spark, tmp_path):
     assert got == {r.doc_id: r.label for r in batch_labels.collect()}
     # the cross-batch merges landed: {1,2,10} -> 1, {3,11} -> 3
     assert got[10] == 1 and got[2] == 1 and got[11] == 3
-
-
-def test_compaction_preserves_pairs_lineage_and_shrinks_files(spark, tmp_path):
-    """VERDICT r5 #3: compact after two epochs, then keep streaming — the
-    compacted run's pair output (including the post-compaction epoch's
-    cross-batch pairs) equals an uncompacted twin's, the lineage gate still
-    passes, the store collapses to one epoch dir with fewer files, and a
-    redrain stays a no-op."""
-    import pytest
-
-    B3 = _docs([(20, BATCH2[0][1]),                       # dup of 10/1/2
-                (21, "unrelated fresh tokens apple pear plum quince fig")])
-
-    # twin A: never compacted
-    (tmp_path / "A").mkdir()
-    srcA, outA, ckptA = _drain(spark, tmp_path / "A",
-                               [_docs(BATCH1), _docs(BATCH2), B3])
-    want = _norm(spark.read.parquet(os.path.join(outA, "pairs")).toPandas())
-
-    # twin B: compact between epoch 1 and epoch 2
-    (tmp_path / "B").mkdir()
-    src, out, ckpt = _drain(spark, tmp_path / "B",
-                            [_docs(BATCH1), _docs(BATCH2)])
-    r = dedup_stream.compact_store(spark, out, ckpt)
-    assert r["compacted_through"] == 1
-    assert r["files_after"] < r["files_before"]
-    assert dedup_stream._epoch_dirs(os.path.join(out, "bands_store")) == {1}
-    assert dedup_stream._epoch_dirs(os.path.join(out, "payload_store")) == {1}
-    assert dedup_stream.verify_store_lineage(out, ckpt)["epochs"] == [0, 1]
-
-    # redrain with no new files: still a no-op after compaction
-    before = spark.read.parquet(os.path.join(out, "pairs")).count()
-    q = dedup_stream.stream_dedup(spark, src, ckpt, out)
-    q.awaitTermination()
-    assert spark.read.parquet(os.path.join(out, "pairs")).count() == before
-
-    # epoch 2 on the compacted store: same pairs as the uncompacted twin
-    spark.createDataFrame(B3).coalesce(1).write.mode("append").parquet(src)
-    q = dedup_stream.stream_dedup(spark, src, ckpt, out)
-    q.awaitTermination()
-    got = _norm(spark.read.parquet(os.path.join(out, "pairs")).toPandas())
-    assert got == want
-    assert frozenset((10, 20)) in got  # cross-batch via the compacted store
-
-    # re-compacting an already-compacted store is a safe no-op-shaped fold
-    r2 = dedup_stream.compact_store(spark, out, ckpt)
-    assert r2["compacted_through"] == 2
-    got2 = _norm(spark.read.parquet(os.path.join(out, "pairs")).toPandas())
-    assert got2 == want
-
-    # a crash window (record missing, stores folded) fails the next stream
-    # start LOUDLY and re-running compact heals it
-    os.remove(os.path.join(out, dedup_stream.COMPACTION_FILE))
-    with pytest.raises(ValueError, match="compaction crashed mid-swap"):
-        dedup_stream.verify_store_lineage(out, ckpt)
-    r3 = dedup_stream.compact_store(spark, out, ckpt)
-    assert r3["compacted_through"] == 2
-    assert dedup_stream.verify_store_lineage(out, ckpt)["epochs"] == [0, 1, 2]
-
-
-def test_compaction_keeps_latest_payload_and_stale_bands(spark, tmp_path):
-    """Compaction folds the payload store keep-latest (a changed doc's NEW
-    content is what future epochs verify against) while the bands fold is a
-    DISTINCT that keeps stale band rows — both exactly the pre-compaction
-    read semantics."""
-    text_a = "alpha beta gamma delta epsilon zeta eta theta"
-    text_b = "one two three four five six seven eight"
-    b1 = _docs([(1, text_a), (2, "unrelated filler vocabulary entirely")])
-    b2 = _docs([(1, text_b)])  # doc 1 changes content
-    src, out, ckpt = _drain(spark, tmp_path, [b1, b2])
-    dedup_stream.compact_store(spark, out, ckpt)
-
-    b3 = _docs([(30, "one two three four five six seven nine"),   # dup of NEW
-                (31, "alpha beta gamma delta epsilon zeta eta iota")])  # dup of OLD
-    spark.createDataFrame(b3).coalesce(1).write.mode("append").parquet(src)
-    q = dedup_stream.stream_dedup(spark, src, ckpt, out)
-    q.awaitTermination()
-    pairs = _norm(spark.read.parquet(os.path.join(out, "pairs")).toPandas())
-    assert frozenset((1, 30)) in pairs      # verified against doc 1's LATEST
-    assert frozenset((1, 31)) not in pairs  # old content no longer matchable

@@ -217,7 +217,6 @@ def test_single_payload_scan_when_riding_pcm(spark, planted, tmp_path):
 
 def test_runnable_constraints_include_family(spark):
     cfg = engine.ValidationConfig(checks=("column_stats", "metadata_integrity"))
-    assert "metadata_integrity" in cfg.constraint_names()
     assert "metadata_integrity" in cfg.runnable_constraints()
 
 

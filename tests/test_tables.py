@@ -71,7 +71,7 @@ def test_incremental_validate_prunes_partition_dirs(spark, tmp_path):
     # the pending set is {2, 3}; the pushed filter must be a partition filter
     manifest = mf.read_manifest(spark, man)
     pend = mf.pending_partitions(
-        clips.select("part_id"), manifest, len(vcfg.constraint_names())
+        clips.select("part_id"), manifest, len(vcfg.runnable_constraints())
     )
     pend_ids = sorted(r.part_id for r in pend.collect())
     assert pend_ids == [2, 3]

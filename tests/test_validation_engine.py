@@ -220,7 +220,7 @@ def test_resume_from_manifest(spark, clips, refs, baseline_rows, tmp_path):
     first = clips.filter(F.col("part_id") <= 4)
     engine.validate(spark, first, cfg=vcfg, run_id="run1", manifest_path=man_path)
     man = mf.read_manifest(spark, man_path)
-    n_constraints = len(vcfg.constraint_names())
+    n_constraints = len(vcfg.runnable_constraints())
     pend = mf.pending_partitions(clips.select("part_id"), man, n_constraints).toPandas()
     assert set(pend.part_id) == {5, 6, 7, 8, 9}
     # phase 2: resume completes only the pending ones
@@ -240,7 +240,7 @@ def test_resume_from_manifest(spark, clips, refs, baseline_rows, tmp_path):
         .toPandas()
     )
     man_pdf = (
-        man.filter(F.col("constraint").isin(vcfg.constraint_names()))
+        man.filter(F.col("constraint").isin(vcfg.runnable_constraints()))
         .select("part_id", "constraint", "status")
         .dropDuplicates(["part_id", "constraint"])
         .orderBy("part_id", "constraint")
@@ -420,3 +420,104 @@ def test_content_dedup_rides_pcm_scan(spark, refs):
     cd2 = viol2.toPandas()
     assert list(cd2[cd2.constraint == "content_dedup"].clip_id) == ["zz-reupload"]
     engine.release("fuse2")
+
+
+# A small golden table (4 partitions) for the family-gating rows below.
+SMALL = synth.golden_config(n_clips=400, clips_per_partition=100)
+AUDIO = ("column_stats", "uniqueness", "referential", "drift", "audio")
+METADATA = ("column_stats", "uniqueness", "referential", "drift", "speaking_rate")
+INPUTS = ("refs", "baseline_rows", "ref_pcm_fn")
+
+
+@pytest.fixture(scope="module")
+def small(spark):
+    clean = spark.createDataFrame(synth.clips_pdf(synth.clean_config(400, 100)))
+    return {
+        "clips": spark.createDataFrame(synth.clips_pdf(SMALL)).cache(),
+        "refs": synth.transcripts_ref_df(spark, SMALL).cache(),
+        "ref_pcm_fn": lambda cid: synth.reference_pcm(SMALL, cid),
+        "baselines": {
+            cols: drift.make_baseline(clean, cols) for cols in (("dur_ms", "sr_hz"), ("dur_ms",))
+        },
+    }
+
+
+def _gating_rows():
+    full = ("dur_ms", "sr_hz")
+    rows = [pytest.param((f.check,), {}, INPUTS, full, False, id=f.check)
+            for f in engine.FAMILIES]
+    for name, checks in (("AUDIO", AUDIO), ("METADATA", METADATA)):
+        rows.append(pytest.param(checks, {}, INPUTS, full, False, id=name))
+        rows += [
+            pytest.param(checks, {}, tuple(i for i in INPUTS if i != drop), full, False,
+                         id=f"{name}-without-{drop}")
+            for drop in INPUTS
+        ]
+    return rows + [
+        # a baseline over fewer columns than ValidationConfig.columns
+        pytest.param(("column_stats", "drift"), {}, INPUTS, ("dur_ms",), True,
+                     id="drift-baseline-narrower"),
+        # a baseline over more columns than ValidationConfig.columns
+        pytest.param(("column_stats", "drift"), {"columns": ("sr_hz",)}, INPUTS, full, True,
+                     id="drift-config-narrower"),
+    ]
+
+
+@pytest.mark.parametrize("checks, cfg_kw, present, base_cols, resume", _gating_rows())
+def test_emitted_constraints_equal_runnable(
+    spark, small, tmp_path, checks, cfg_kw, present, base_cols, resume
+):
+    """validate() emits exactly the constraint names runnable_constraints()
+    promises for the same inputs, without error rows, so a resume right
+    after a complete validate finds nothing pending."""
+    cfg = engine.ValidationConfig(checks=checks, **cfg_kw)
+    given = {"refs": small["refs"], "baseline_rows": small["baselines"][base_cols],
+             "ref_pcm_fn": small["ref_pcm_fn"]}
+    inputs = {k: (v if k in present else None) for k, v in given.items()}
+    man = str(tmp_path / "manifest") if resume else None
+    v, _ = engine.validate(spark, small["clips"], cfg=cfg, run_id="gate",
+                           manifest_path=man, **inputs)
+    rows = v.select("constraint", "status", "detail").collect()
+    assert [(r.constraint, r.detail) for r in rows if r.status == "error"] == []
+    assert {r.constraint for r in rows} == set(cfg.runnable_constraints(**inputs))
+    if resume:
+        again, _ = engine.incremental_validate(
+            spark, small["clips"], man, cfg=cfg, run_id="gate-resume", **inputs)
+        assert again.count() == 0
+        engine.release("gate-resume")
+    engine.release("gate")
+
+
+def test_pcm_build_failure_records_one_audio_error(spark, small, monkeypatch):
+    """A PCM pass whose plan cannot be built yields one `audio` error row;
+    metadata_integrity and content_dedup, which ride that pass when audio
+    runs, fall back to their own scans and produce the rows they produce
+    with audio off."""
+    from real_time_anomaly_detection_spark.operators import audio_checks
+
+    def _fail(*args, **kwargs):
+        raise RuntimeError("pcm plan failed")
+
+    monkeypatch.setattr(audio_checks, "pcm_check", _fail)
+    kw = dict(refs=small["refs"], ref_pcm_fn=small["ref_pcm_fn"])
+    v, viol = engine.validate(
+        spark, small["clips"], run_id="pcm-fail", **kw,
+        cfg=engine.ValidationConfig(checks=("metadata_integrity", "content_dedup", "audio")))
+    v_ref, viol_ref = engine.validate(
+        spark, small["clips"], run_id="pcm-ref", **kw,
+        cfg=engine.ValidationConfig(checks=("metadata_integrity", "content_dedup")))
+
+    def _rows(df):  # full rows, map columns as sorted items, compared by repr
+        return sorted(
+            repr({k: (sorted(x.items()) if isinstance(x, dict) else x)
+                  for k, x in r.asDict().items()})
+            for r in df.collect()
+        )
+
+    errors = v.filter("status = 'error'").collect()
+    assert [(r.constraint, r.part_id) for r in errors] == [("audio", -1)]
+    assert "pcm plan failed" in errors[0].detail
+    assert _rows(v.filter("status != 'error'")) == _rows(v_ref)
+    assert _rows(viol) == _rows(viol_ref)
+    engine.release("pcm-fail")
+    engine.release("pcm-ref")
