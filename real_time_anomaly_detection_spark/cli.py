@@ -7,20 +7,18 @@ Subcommands mirror the engine API (SURVEY.md §7.1):
               runs reconstruct the SAME oracle the table was built with
   profile     per-partition column stats -> parquet
   validate    full constraint run -> verdicts/violations parquet (+ manifest)
-  incremental resume: validate only partitions missing from the manifest
+  incremental resume: validate only partitions missing from the manifest;
+              each run writes verdicts/ and violations/ under run_id=<id>
   stream-validate  continuous validation of newly-arrived clip files
               (readStream + foreachBatch over the validate engine)
   features    per-clip audio curation features + keep/drop filter
-  stream-dedup incremental near-dup detection at ingest (new docs vs the
-              accumulated corpus, MinHash-LSH candidates + exact verify)
   dedup-apply cluster accumulated near-dup pairs (connected components,
               star contraction) and write clusters/ + the deduplicated
-              survivors/ corpus — the terminal step of either dedup path
-              (stream-dedup's pairs root or any batch pair table)
+              survivors/ corpus, from a pairs root (epoch_id=N dirs of
+              doc_a, doc_b) or any batch pair table
   cluster-update  incrementally fold NEW pairs epochs into persisted
               cluster labels (star forest reused as state — per-update cost
-              tracks new-pair volume, not accumulated-pair volume); safe to
-              run on a cron beside stream-dedup
+              tracks new-pair volume, not accumulated-pair volume)
   report      assemble the JSON report document from a verdicts table (S10)
   export-csv  CSV export of any parquet table (S9, view_data.py:163-177)
   upsert      keyed MERGE of a parquet batch into a target table (S7)
@@ -261,34 +259,6 @@ def main(argv: list[str] | None = None) -> None:
                    help="emit only pairs with est_jaccard >= this floor "
                         "(keeps the O(P^2) table triage-sized)")
 
-    p = sub.add_parser("stream-dedup")
-    _add_common(p)
-    p.add_argument("--input", required=True,
-                   help="documents parquet dir watched as a stream")
-    p.add_argument("--checkpoint", required=True)
-    p.add_argument("--out", required=True,
-                   help="output root: pairs/ + bands_store/ + payload_store/")
-    p.add_argument("--threshold", type=float,
-                   help="jaccard similarity floor (default: 0.5)")
-    p.add_argument("--max-bucket-size", type=int,
-                   help="LOSSY hot-bucket cap: drop LSH buckets larger than "
-                        "this before the candidate joins")
-    p.add_argument("--salt", type=int,
-                   help="EXACT hot-bucket mitigation: split each bucket's "
-                        "pair work across this many tasks")
-    p.add_argument("--store-buckets", type=int, default=64,
-                   help="hash-bucket partition count for the state stores "
-                        "(file pruning granularity)")
-    p.add_argument("--n-bands", type=int,
-                   help="LSH band count (default: derived from --threshold "
-                        "so the S-curve midpoint matches it); pinned to the "
-                        "store on first run — a mismatched re-run errors")
-    p.add_argument("--rows-per-band", type=int,
-                   help="minhash rows per band (default: derived from "
-                        "--threshold)")
-    p.add_argument("--continuous", action="store_true")
-    p.add_argument("--trigger", default="600 seconds")
-
     p = sub.add_parser("curate")
     _add_common(p)
     p.add_argument("--input", required=True,
@@ -411,8 +381,8 @@ def main(argv: list[str] | None = None) -> None:
     _add_common(p)
     p.add_argument("--pairs", required=True,
                    help="near-dup pairs parquet (doc_a, doc_b) — a "
-                        "stream-dedup out/pairs root (all epochs read) or "
-                        "any batch pair table")
+                        "pairs root of epoch_id=N dirs (all epochs read) "
+                        "or any batch pair table")
     p.add_argument("--docs", required=True,
                    help="the full documents parquet to deduplicate")
     p.add_argument("--id-col", default="doc_id",
@@ -440,7 +410,7 @@ def main(argv: list[str] | None = None) -> None:
     p = sub.add_parser("cluster-update")
     _add_common(p)
     p.add_argument("--pairs", required=True,
-                   help="pairs root with epoch_id=N dirs (stream-dedup out)")
+                   help="pairs root: epoch_id=N dirs of (doc_a, doc_b)")
     p.add_argument("--out", required=True,
                    help="clusters root: clusters_store/ + clusters_head.json")
     p.add_argument("--max-iters", type=int, default=25)
@@ -516,29 +486,6 @@ def main(argv: list[str] | None = None) -> None:
         else:
             q = writer.trigger(availableNow=True).start()
             q.awaitTermination()
-        print(args.out)
-        return
-
-    if args.cmd == "stream-dedup":
-        from .streaming import dedup_stream
-
-        band_kwargs = {
-            k: v
-            for k, v in (("n_bands", args.n_bands),
-                         ("rows_per_band", args.rows_per_band))
-            if v is not None
-        } or None
-        q = dedup_stream.stream_dedup(
-            spark, args.input, args.checkpoint, args.out,
-            threshold=args.threshold,
-            max_bucket_size=args.max_bucket_size,
-            salt=args.salt,
-            store_buckets=args.store_buckets,
-            available_now=not args.continuous,
-            processing_time=args.trigger,
-            band_kwargs=band_kwargs,
-        )
-        q.awaitTermination()
         print(args.out)
         return
 
@@ -999,12 +946,16 @@ def main(argv: list[str] | None = None) -> None:
         verdicts, violations = engine.validate(
             spark, clips, manifest_path=args.manifest, **kw
         )
+        run_dir = []
     else:
         verdicts, violations = engine.incremental_validate(
             spark, clips, args.manifest, **kw
         )
-    verdicts.write.mode("overwrite").parquet(os.path.join(args.out, "verdicts"))
-    violations.write.mode("overwrite").parquet(os.path.join(args.out, "violations"))
+        # each resume overwrites only its own run_id=<id> dir (as
+        # stream-validate does per epoch_id), so earlier resumes' rows stay
+        run_dir = [f"run_id={run_id}"]
+    for name, df in (("verdicts", verdicts), ("violations", violations)):
+        df.write.mode("overwrite").parquet(os.path.join(args.out, name, *run_dir))
     engine.release(run_id)  # outputs are materialized — drop the cached plans
     print(args.out)
 

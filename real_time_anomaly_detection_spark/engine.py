@@ -33,11 +33,11 @@ ERROR per cycle and continue): fault isolation is BUILD-TIME per family plus
 per-clip at runtime — a constraint family whose plan cannot be CONSTRUCTED
 yields a status='error' verdict row and the run continues, and per-clip audio
 decode errors are caught inside the UDF and surface as status='error'
-partition verdicts. A runtime failure in any other family still aborts the
-whole validate action, because all families union into one lazy DataFrame and
-Spark evaluates it as one job; `validate_isolated` trades one job (and one
-source-scan sync point) per family for full runtime isolation when that
-matters. Errored partitions are retried on resume
+partition verdicts. All families union into each returned DataFrame, which is
+evaluated by one action (AQE splits that action into many Spark jobs), so a
+runtime failure in any other family aborts the whole action;
+`validate_isolated` materializes each family with its own actions for full
+runtime isolation when that matters. Errored partitions are retried on resume
 (`manifest.completed_partitions` excludes them).
 """
 
@@ -366,17 +366,17 @@ def validate_isolated(
     manifest_path: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """validate() with RUNTIME fault isolation per constraint family (the T7
-    upgrade the one-job design cannot give): each family runs as its own
+    upgrade a single shared action cannot give): each family runs as its own
     materialized action, so a family that fails mid-execution — a corrupt
     side input, an OOM'd join, a refs store outage — yields a status='error'
     verdict row while every other family's results survive. Errored families'
     partitions are retried on resume as usual.
 
-    Cost: one job (and one source-scan sync point) per family instead of one
-    shared job — the shared `meta` projection is scanned per family rather
-    than once. Use for long-running 100 TB runs where losing five finished
-    families to the sixth's runtime failure costs more than the extra scans;
-    the default validate() remains the cheap path. Returned DataFrames are
+    Cost: two actions (and one source-scan sync point) per family instead of
+    one action per returned DataFrame — the shared `meta` projection is
+    scanned per family rather than once. Use for long-running 100 TB runs
+    where losing five finished families to the sixth's runtime failure costs
+    more than the extra scans; the default validate() remains the cheap path. Returned DataFrames are
     persisted results registered under `run_id` — call release(run_id) when
     done with them."""
     cfg = cfg or ValidationConfig()

@@ -83,6 +83,46 @@ def test_validate_cli_content_dedup_flag(spark, tmp_path):
     assert len(cd) == 3 and all(r.status == "pass" for r in cd)
 
 
+def test_incremental_resumes_keep_earlier_runs(spark, tmp_path):
+    """incremental writes each run under run_id=<id>: a resume over newly
+    appended partitions, then a no-op resume, into the same --out keep the
+    first resume's verdicts and violation rows (metadata checks only)."""
+    from real_time_anomaly_detection_spark import synth
+
+    cfg = synth.golden_config(n_clips=400, clips_per_partition=100)
+    clips = synth.clips_df(spark, cfg)
+    data, refs = str(tmp_path / "inc_clips"), str(tmp_path / "inc_refs")
+    synth.transcripts_ref_df(spark, cfg).write.parquet(refs)
+    clips.filter("part_id < 2").write.parquet(data)
+    out, man = str(tmp_path / "inc_out"), str(tmp_path / "inc_manifest")
+
+    def resume(run_id):
+        cli.main(["incremental", "--input", data, "--refs", refs,
+                  "--manifest", man, "--out", out, "--run-id", run_id])
+
+    def parts(table, run_id=None):
+        df = spark.read.parquet(os.path.join(out, table))
+        if run_id:
+            df = df.filter(df.run_id == run_id)
+        return {r.part_id for r in df.select("part_id").distinct().collect()}
+
+    resume("r1")
+    r1_viol = sorted(spark.read.parquet(
+        os.path.join(out, "violations", "run_id=r1")).collect(), key=str)
+    assert parts("verdicts", "r1") == {0, 1} and r1_viol
+
+    clips.filter("part_id >= 2").write.mode("append").parquet(data)
+    resume("r2")
+    assert parts("verdicts", "r2") == {2, 3}
+    resume("r3")  # nothing pending
+    assert parts("verdicts", "r3") == set()
+
+    assert parts("verdicts") == {0, 1, 2, 3}
+    viol = spark.read.parquet(os.path.join(out, "violations"))
+    assert sorted(viol.filter(viol.run_id == "r1").drop("run_id").collect(),
+                  key=str) == r1_viol
+
+
 def test_features_cli(spark, tmp_path):
     data = str(tmp_path / "f_clips")
     cli.main(["synth", "--n-clips", "80", "--clips-per-partition", "40",
@@ -97,9 +137,10 @@ def test_features_cli(spark, tmp_path):
 
 
 def test_dedup_apply_cli(spark, tmp_path):
-    """dedup-apply: cluster a pairs table (epoch-partitioned, as
-    stream-dedup writes it) and emit clusters + the surviving corpus —
-    chain {0,1,2} survives as 0, pair {10,11} as 10, loner 20 untouched."""
+    """dedup-apply: cluster a pairs root (epoch_id=N dirs of doc_a, doc_b)
+    and emit clusters + the surviving corpus — chain {0,1,2} survives as 0,
+    pair {10,11} as 10, loner 20 untouched. cluster-update over the same
+    root folds both epochs into labels equal to dedup-apply's clusters."""
     pairs_root = str(tmp_path / "pairs")
     spark.createDataFrame([(0, 1), (1, 2)], "doc_a long, doc_b long").write.parquet(
         os.path.join(pairs_root, "epoch_id=0"))
@@ -121,6 +162,13 @@ def test_dedup_apply_cli(spark, tmp_path):
     survivors = sorted(
         r.doc_id for r in spark.read.parquet(os.path.join(out, "survivors")).collect())
     assert survivors == [0, 10, 20]
+
+    from real_time_anomaly_detection_spark.streaming import clusters as C
+
+    clroot = str(tmp_path / "cl")
+    cli.main(["cluster-update", "--pairs", pairs_root, "--out", clroot])
+    labels = {r.doc_id: r.label for r in C.head_labels(spark, clroot).collect()}
+    assert labels == {d: cid for d, (cid, _) in clusters.items()}
 
 
 def test_audio_neardup_transcript_conflicts_cli(spark, tmp_path):
