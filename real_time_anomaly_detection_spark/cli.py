@@ -195,28 +195,6 @@ def main(argv: list[str] | None = None) -> None:
                         "drift/ verdicts of the feature distributions "
                         "against it (capture-chain regression check)")
 
-    p = sub.add_parser("segment")
-    _add_common(p)
-    p.add_argument("--input", required=True, help="clips parquet dir")
-    p.add_argument("--out", required=True,
-                   help="output root: segments/ (+ audio/ with --materialize)")
-    p.add_argument("--window-ms", type=int, default=30_000)
-    p.add_argument("--hop-ms", type=int, default=None,
-                   help="window start stride (default: window-ms, no overlap)")
-    p.add_argument("--min-tail-ms", type=int, default=2_000)
-    p.add_argument("--materialize", action="store_true",
-                   help="also decode and write the window payloads (pcm16)")
-
-    p = sub.add_parser("pack-batches")
-    _add_common(p)
-    p.add_argument("--input", required=True, help="clips parquet dir")
-    p.add_argument("--out", required=True,
-                   help="output root: assignments/ and batch_stats/")
-    p.add_argument("--budget-s", type=float, default=60.0,
-                   help="audio seconds per training batch")
-    p.add_argument("--n-shards", type=int, default=8,
-                   help="independent packing streams (parallelism unit)")
-
     p = sub.add_parser("audio-neardup")
     _add_common(p)
     p.add_argument("--input", required=True, help="clips parquet dir")
@@ -761,24 +739,6 @@ def main(argv: list[str] | None = None) -> None:
         print(args.out)
         return
 
-    if args.cmd == "pack-batches":
-        from .operators import audio_packing as AP
-
-        clips = spark.read.parquet(args.input)
-        asg = AP.pack_batches(clips, budget_s=args.budget_s,
-                              n_shards=args.n_shards)
-        asg.write.mode("overwrite").parquet(
-            os.path.join(args.out, "assignments")
-        )
-        AP.batch_stats(
-            spark.read.parquet(os.path.join(args.out, "assignments")),
-            budget_s=args.budget_s,
-        ).write.mode("overwrite").parquet(
-            os.path.join(args.out, "batch_stats")
-        )
-        print(args.out)
-        return
-
     if args.cmd == "features":
         from .operators import audio_features as AF
 
@@ -796,23 +756,6 @@ def main(argv: list[str] | None = None) -> None:
                 spark.read.parquet(os.path.join(args.out, "features")),
                 spark.read.parquet(args.drift_baseline),
             ).write.mode("overwrite").parquet(os.path.join(args.out, "drift"))
-        print(args.out)
-        return
-
-    if args.cmd == "segment":
-        from .operators import audio_segmentation as ASEG
-
-        clips = spark.read.parquet(args.input)
-        hop = args.hop_ms if args.hop_ms is not None else args.window_ms
-        ASEG.segment_plan(
-            clips, window_ms=args.window_ms, hop_ms=hop,
-            min_tail_ms=args.min_tail_ms,
-        ).write.mode("overwrite").parquet(os.path.join(args.out, "segments"))
-        if args.materialize:
-            ASEG.segment_pcm(
-                clips, window_ms=args.window_ms, hop_ms=hop,
-                min_tail_ms=args.min_tail_ms,
-            ).write.mode("overwrite").parquet(os.path.join(args.out, "audio"))
         print(args.out)
         return
 

@@ -126,11 +126,7 @@ def pcm_check(
     return projected.mapInPandas(check_batches, schema=schema)
 
 
-def transcript_check(
-    clips: DataFrame,
-    refs: DataFrame,
-    broadcast_refs: bool | None = None,
-) -> DataFrame:
+def transcript_check(clips: DataFrame, refs: DataFrame) -> DataFrame:
     """Per-clip transcript equality vs the ground-truth refs table — pure
     Catalyst equi-join on the small columns only (never `bytes`).
 
@@ -139,10 +135,6 @@ def transcript_check(
     double-flagging it here would fail every partition the moment one ref row
     is missing."""
     ref_side = refs.select(F.col("clip_id"), F.col("transcript").alias("_ref_transcript"))
-    if broadcast_refs is True:
-        ref_side = F.broadcast(ref_side)
-    elif broadcast_refs is False:
-        ref_side = ref_side.hint("shuffle_merge")
     joined = clips.select("part_id", "clip_id", "transcript").join(ref_side, "clip_id", "inner")
     return joined.select(
         "part_id",

@@ -14,7 +14,7 @@ beyond-the-reference audio pipeline op, the modality twin of the text
 side's normalization steps (q56 redaction rewrites text in place the same
 way this rewrites payloads in place).
 
-Scale shape (the segment_pcm/pcm_check convention): ONE mapInPandas scan of
+Scale shape (the pcm_check convention): ONE mapInPandas scan of
 the payload, decode → numpy gain → re-encode in the ORIGINAL codec, zero
 shuffles — `bytes` never leaves its scan task, so the op composes with a
 direct `.write` into a map-only job at any corpus size. Undecodable clips

@@ -9,11 +9,11 @@ clips.clip_id`, both directions:
 - missing refs:  clips with no ground-truth row   (clips ANTI ref)
 
 Join strategy is explicit (north rule "broadcast/sort-merge anti-joins"):
-`broadcast=True` hints BroadcastHashJoin (parent fits in executors);
-`broadcast=False` hints SHUFFLE_MERGE (forces the sort-merge path);
-`broadcast=None` leaves Catalyst/AQE to pick by size stats, with skew-join
-splitting for hot keys. At 10^12 rows the clip side never broadcasts; the
-ref side may.
+`missing_refs(broadcast=True)` hints BroadcastHashJoin (the ref keys fit in
+executors); `broadcast=False` hints SHUFFLE_MERGE (forces the sort-merge
+path); `broadcast=None` leaves Catalyst/AQE to pick by size stats, with
+skew-join splitting for hot keys. At 10^12 rows the clip side never
+broadcasts, so `orphan_refs` always leaves the choice to Catalyst/AQE.
 """
 
 from __future__ import annotations
@@ -32,9 +32,9 @@ def _hint(df: DataFrame, broadcast: bool | None) -> DataFrame:
     return df
 
 
-def orphan_refs(clips: DataFrame, refs: DataFrame, broadcast: bool | None = None) -> DataFrame:
+def orphan_refs(clips: DataFrame, refs: DataFrame) -> DataFrame:
     """Reference rows whose clip_id matches no clip."""
-    return refs.join(_hint(clips.select("clip_id"), broadcast), "clip_id", "left_anti")
+    return refs.join(clips.select("clip_id"), "clip_id", "left_anti")
 
 
 def missing_refs(clips: DataFrame, refs: DataFrame, broadcast: bool | None = None) -> DataFrame:
@@ -44,14 +44,13 @@ def missing_refs(clips: DataFrame, refs: DataFrame, broadcast: bool | None = Non
 
 
 def referential_violations(
-    clips: DataFrame, refs: DataFrame, broadcast_refs: bool | None = None,
-    miss_pre: DataFrame | None = None,
+    clips: DataFrame, refs: DataFrame, miss_pre: DataFrame | None = None,
 ) -> DataFrame:
     """`miss_pre`: optionally pass a precomputed (ideally persisted)
     missing_refs() result so verdicts and violations share ONE anti-join
     pass instead of re-running it (engine.validate does)."""
     if miss_pre is None:
-        miss_pre = missing_refs(clips, refs, broadcast=broadcast_refs)
+        miss_pre = missing_refs(clips, refs)
     miss = miss_pre.select(
         F.col("part_id"),
         F.lit("referential").alias("constraint"),
@@ -61,7 +60,7 @@ def referential_violations(
         F.lit("reference_row").alias("expected"),
         F.lit("clip has no transcripts_ref row").alias("detail"),
     )
-    orph = orphan_refs(clips, refs, broadcast=None).select(
+    orph = orphan_refs(clips, refs).select(
         F.lit(-1).cast("int").alias("part_id"),  # orphan refs belong to no clip partition
         F.lit("referential").alias("constraint"),
         F.col("clip_id"),
@@ -74,12 +73,11 @@ def referential_violations(
 
 
 def referential_verdicts(
-    clips: DataFrame, refs: DataFrame, broadcast_refs: bool | None = None,
-    miss_pre: DataFrame | None = None,
+    clips: DataFrame, refs: DataFrame, miss_pre: DataFrame | None = None,
 ) -> DataFrame:
     """`miss_pre`: see referential_violations."""
     if miss_pre is None:
-        miss_pre = missing_refs(clips, refs, broadcast=broadcast_refs)
+        miss_pre = missing_refs(clips, refs)
     per_part = clips.groupBy("part_id").agg(F.count(F.lit(1)).alias("n_rows"))
     miss = (
         miss_pre

@@ -2,7 +2,7 @@
 
 The step between curation and training that none of the assignment ops
 cover: q45/q57 decide WHICH split a document belongs to, q52/q63 decide
-WHETHER it is kept, q54/audio_packing decide what shares a training batch —
+WHETHER it is kept, q54 decides what shares a training batch —
 this op decides the ORDER the trainer reads, materialized as size-balanced
 shards whose concatenation is a reproducible pseudo-random permutation of
 the corpus (LLM training wants documents shuffled once, globally, and

@@ -34,21 +34,22 @@ from pyspark.sql import functions as F
 _SEVERITY = {"pass": 0, "insufficient_data": 1, "fail": 2, "error": 3}
 
 
-def _sev_expr():
-    return (
-        F.when(F.col("status") == "error", 3)
-        .when(F.col("status") == "fail", 2)
-        .when(F.col("status") == "insufficient_data", 1)
-        .otherwise(0)
-    )
+def _sev_expr(status):
+    """Severity rank of a status column per ``_SEVERITY``; any other status
+    (and null) ranks as pass."""
+    rank = F.lit(_SEVERITY["pass"])
+    for name, sev in _SEVERITY.items():
+        if name != "pass":
+            rank = F.when(status == name, sev).otherwise(rank)
+    return rank
 
 
 def overall_rollup(verdicts: DataFrame) -> DataFrame:
     """Per-partition overall status (U16/A14): max-severity across constraints,
     with the all-insufficient -> 'no_data' special state."""
     g = verdicts.groupBy("part_id").agg(
-        F.max(_sev_expr()).alias("_max_sev"),
-        F.min(_sev_expr()).alias("_min_sev"),
+        F.max(_sev_expr(F.col("status"))).alias("_max_sev"),
+        F.min(_sev_expr(F.col("status"))).alias("_min_sev"),
         F.count(F.lit(1)).alias("n_constraints"),
         F.sum(F.when(F.col("status") == "fail", 1).otherwise(0)).alias("n_fail"),
         F.sum(F.when(F.col("status") == "error", 1).otherwise(0)).alias("n_error"),
@@ -56,11 +57,13 @@ def overall_rollup(verdicts: DataFrame) -> DataFrame:
             "n_insufficient"
         ),
     )
+    insufficient = _SEVERITY["insufficient_data"]
     overall = (
-        F.when(F.col("_max_sev") == 3, F.lit("error"))
-        .when(F.col("_max_sev") == 2, F.lit("fail"))
-        .when((F.col("_max_sev") == 1) & (F.col("_min_sev") == 1), F.lit("no_data"))
-        .when(F.col("_max_sev") == 1, F.lit("insufficient_data"))
+        F.when(F.col("_max_sev") == _SEVERITY["error"], F.lit("error"))
+        .when(F.col("_max_sev") == _SEVERITY["fail"], F.lit("fail"))
+        .when((F.col("_max_sev") == insufficient) & (F.col("_min_sev") == insufficient),
+              F.lit("no_data"))
+        .when(F.col("_max_sev") == insufficient, F.lit("insufficient_data"))
         .otherwise(F.lit("pass"))
     )
     return g.select(
@@ -263,22 +266,14 @@ def run_diff(prev: DataFrame, cur: DataFrame) -> DataFrame:
     )
     j = a.join(b, ["part_id", "constraint"], "full_outer")
 
-    def sev(c):
-        return (
-            F.when(c == "error", 3)
-            .when(c == "fail", 2)
-            .when(c == "insufficient_data", 1)
-            .otherwise(0)
-        )
-
-    sp, sc = sev(F.col("status_prev")), sev(F.col("status_cur"))
+    sp, sc = _sev_expr(F.col("status_prev")), _sev_expr(F.col("status_cur"))
     transition = (
         F.when(F.col("status_prev").isNull(), F.lit("new"))
         .when(F.col("status_cur").isNull(), F.lit("removed"))
         .when(sc > sp, F.lit("regressed"))
-        .when((sc < sp) & (sc == 0), F.lit("fixed"))
+        .when((sc < sp) & (sc == _SEVERITY["pass"]), F.lit("fixed"))
         .when(sc < sp, F.lit("improved"))
-        .when(sc >= 2, F.lit("still_failing"))
+        .when(sc >= _SEVERITY["fail"], F.lit("still_failing"))
         .otherwise(F.lit("unchanged"))
     )
     delta = F.map_zip_with("_m_prev", "_m_cur", lambda k, x, y: y - x)

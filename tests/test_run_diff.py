@@ -58,6 +58,19 @@ def test_transition_matrix(spark, pair):
     assert d[6].transition == "removed" and d[6].status_cur is None
     assert d[7].transition == "new" and d[7].status_prev is None
     assert d[7].detail_cur == "fresh partition"
+    # insufficient_data sits between pass and fail in the severity order
+    prev = _verdicts(spark, [
+        (0, "uniqueness", "pass", None, None),
+        (1, "uniqueness", "fail", None, None),
+        (2, "uniqueness", "insufficient_data", None, None),
+    ])
+    cur = _verdicts(spark, [
+        (0, "uniqueness", "insufficient_data", None, None),
+        (1, "uniqueness", "insufficient_data", None, None),
+        (2, "uniqueness", "pass", None, None),
+    ])
+    d = {r.part_id: r.transition for r in rp.run_diff(prev, cur).collect()}
+    assert d == {0: "regressed", 1: "improved", 2: "fixed"}
 
 
 def test_metric_delta_semantics(spark, pair):
